@@ -13,6 +13,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from embulk_filter_timestamp_format_spark import policy
 from embulk_filter_timestamp_format_spark.functions.format import TimestampFormatterPlan
 from embulk_filter_timestamp_format_spark.functions.parse import TimestampParserPlan
 from embulk_filter_timestamp_format_spark.functions import units as U
@@ -31,68 +32,11 @@ from embulk_filter_timestamp_format_spark.streaming.cdc import dedup_latest
 # r06 guide-§2.5/§6 fix: each sf table is ONE parquet file (sf1.0 events
 # = 16 MB), i.e. 1-2 input splits at the default 128 MB maxPartitionBytes
 # — so every per-row-heavy projection (regex parse, shingle/sketch HOFs,
-# dot products) ran near-serial regardless of core count. Spread the scan
-# over the session's shuffle width by hashing the unique id — one slim
-# exchange, deterministic (no round-robin), with an EXPLICIT partition
-# count so AQE's coalescing does not fold the fan-out back to one task.
-# Scale-adaptive: a table whose scan already yields >= that many splits
-# is left untouched (the partition count per path is a plan attribute,
-# memoized; no data or results are cached).
-_SCAN_PARTS: dict[str, int] = {}
-
-
-def _spread_width(spark: SparkSession) -> int:
-    try:
-        return max(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            spark.sparkContext.defaultParallelism,
-        )
-    except Exception:
-        return spark.sparkContext.defaultParallelism
-
-
-# Below this many bytes of parquet the fan-out exchange costs more than
-# the parallelism it buys (measured at sf0.1: ~1-4 MB tables lost
-# 0.2-1 s per query to the exchange; at sf1's 16-21 MB single files the
-# spread wins 2-12x on the heavy projections). Size-adaptive, not
-# core-count-tuned: rows scale with bytes, and the exchange only pays
-# off once per-row work x rows exceeds its fixed cost.
-# 4 MB of COMPRESSED parquet (snappy text compresses 3-4x, so this is
-# ~12-16 MB of rows): sf0.1-scale tables (0.8-2 MB) skip the exchange,
-# sf1-scale single files (5-18 MB) keep it.
-_SPREAD_MIN_BYTES = int(
-    __import__("os").environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", 4 * 1024 * 1024)
-)
-_SCAN_BYTES: dict[str, int] = {}
-
-
-def _table_bytes(path: str) -> int:
-    import os
-
-    b = _SCAN_BYTES.get(path)
-    if b is None:
-        if os.path.isdir(path):
-            b = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _d, fs in os.walk(path)
-                for f in fs
-            )
-        else:
-            b = os.path.getsize(path) if os.path.exists(path) else 0
-        _SCAN_BYTES[path] = b
-    return b
-
-
+# dot products) ran near-serial regardless of core count. Above the
+# size gate the scan is spread over the session's width by hashing the
+# unique id (embulk_filter_timestamp_format_spark/policy.py).
 def _read_spread(spark: SparkSession, path: str, id_col: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    if _table_bytes(path) < _SPREAD_MIN_BYTES:
-        return df
-    n = _SCAN_PARTS.get(path)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        _SCAN_PARTS[path] = n
-    target = _spread_width(spark)
-    return df.repartition(target, F.col(id_col)) if n < target else df
+    return policy.spread(spark.read.parquet(path), id_col)
 
 
 def _events(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:

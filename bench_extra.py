@@ -20,40 +20,7 @@ import json
 import os
 import time
 
-
-def _steal_sample():
-    try:
-        with open("/proc/stat") as f:
-            vals = [int(x) for x in f.readline().split()[1:]]
-        return sum(vals), vals[7] if len(vals) > 7 else 0
-    except Exception:
-        return 0, 0
-
-
-def _steal_pct(b, a):
-    dt = a[0] - b[0]
-    return round(100.0 * (a[1] - b[1]) / dt, 2) if dt > 0 else 0.0
-
-
-def build_spark(cpus: str):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("efts-bench-extra")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
-
-def force(df):
-    df.write.format("noop").mode("overwrite").save()
+from bench import _proc_stat_sample, _steal_pct, build_spark, force
 
 
 def main():
@@ -93,18 +60,18 @@ def main():
             if args.no_time:
                 out[name] = {"explained": True}
                 continue
-        s0 = _steal_sample()
+        s0 = _proc_stat_sample()
         t0 = time.time()
         force(fn(spark, args.sf))
         cold = time.time() - t0
-        steal_cold = _steal_pct(s0, _steal_sample())
+        steal_cold = _steal_pct(s0, _proc_stat_sample())
         best, steals = float("inf"), []
         for _ in range(args.warm_runs):
-            s0 = _steal_sample()
+            s0 = _proc_stat_sample()
             t0 = time.time()
             force(fn(spark, args.sf))
             best = min(best, time.time() - t0)
-            steals.append(_steal_pct(s0, _steal_sample()))
+            steals.append(_steal_pct(s0, _proc_stat_sample()))
         unpersist_intermediates()
         out[name] = {"cold": round(cold, 3), "warm": round(best, 3),
                      "steal_cold": steal_cold, "steal_warm": steals}

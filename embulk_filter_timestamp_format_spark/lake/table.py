@@ -402,14 +402,14 @@ class IceTable:
                     else max(compact_threshold // 2, 0)
                 ),
                 # parquet codec for data files, a table property so every
-                # writer agrees. Measured on the 8M-event replay
-                # (scripts/codec_ab.py, two interleaved rounds,
-                # BENCH/NOTES.md round 4): at low steal snappy ≈
-                # uncompressed on wall clock and zstd/lz4 run ~8-15%
-                # slower, but zstd files are ~15% smaller — on an
-                # object-store-bound cluster that size win flips the
-                # tradeoff, so zstd is the documented at-scale setting
-                # while snappy stays the local default.
+                # writer agrees. Measured on the 8M-event replay (two
+                # interleaved rounds, BENCH/NOTES.md "Round 4: lake parquet
+                # codec A/B"): at low steal snappy ≈ uncompressed on wall
+                # clock and zstd/lz4 run ~8-15% slower, but zstd files
+                # are ~15% smaller — on an object-store-bound cluster
+                # that size win flips the tradeoff, so zstd is the
+                # documented at-scale setting while snappy stays the
+                # local default.
                 "codec": codec,
                 # manifest column statistics: per-file min/max/null-count
                 # bounds harvested from the parquet FOOTER at commit time
@@ -1080,7 +1080,7 @@ class IceTable:
         op_col: str = "op",
         lineage: "dict | None" = None,
         probe_df: "DataFrame | None" = None,
-        probe_rows: "list[tuple] | None" = None,
+        probe_rows: "tuple[int, list[tuple]] | None" = None,
     ) -> "int | None":
         """Copy-on-write MERGE: `updates` has one row per key with op I/U/D
         (pre-deduped by the caller); I/U upsert the payload, D deletes.
@@ -1096,12 +1096,17 @@ class IceTable:
         passes the raw rows the batch was built from, which dedup-latest
         and delete batches preserve key-for-key.
 
-        ``probe_rows``: optional precollected probe result — a list of
-        ``(bucket, key_min, key_max)`` tuples covering every touched
-        bucket (e.g. harvested from a stats aggregate the caller already
-        runs over the raw batch). Skips the probe job entirely; the
-        anti-join keys then come from ``probe_df`` (which is NOT
-        executed as a second full plan — pass a slim raw projection).
+        ``probe_rows``: optional precollected probe result —
+        ``(num_buckets, [(bucket, key_min, key_max), ...])`` covering
+        every touched bucket under the bucket count it was computed at
+        (e.g. harvested from a stats aggregate the caller already runs
+        over the raw batch). Skips the probe job entirely; the anti-join
+        keys then come from ``probe_df`` (which is NOT executed as a
+        second full plan — pass a slim raw projection). Bucket ids are
+        only meaningful under their bucket count: whenever the snapshot
+        a pass reads (the first or a retry) has another one — a
+        concurrent ``rebucket`` — the rows are ignored and the merge
+        runs its own probe.
 
         Returns the committed version (None for an empty batch; unchanged
         version when the batch id is fenced).
@@ -1148,10 +1153,10 @@ class IceTable:
             # the probe job disappears entirely.
             probe = probe_df if probe_df is not None else updates
             pk = None
-            if probe_rows is not None:
+            if probe_rows is not None and probe_rows[0] == num_buckets:
                 bucket_rows = [
                     {"__bucket": b, "__lo": lo, "__hi": hi}
-                    for (b, lo, hi) in probe_rows
+                    for (b, lo, hi) in probe_rows[1]
                 ]
             else:
                 pk = probe.select(

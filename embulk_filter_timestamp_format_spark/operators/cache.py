@@ -41,53 +41,6 @@ def register_persist(df: DataFrame, enabled: bool = True) -> DataFrame:
     return df
 
 
-def spread_scan(df: DataFrame, id_col: str) -> DataFrame:
-    """Fan a narrow input out to the session's parallelism before a
-    per-row-heavy extraction stage (r06, guide §2.5/§6).
-
-    Lake-table reads surface one file per bucket (8-16 splits) and
-    single-file parquet tables 1-2 splits, so a shingle/sketch/regex
-    projection planned into the scan stage runs on that many tasks
-    regardless of core count. One deterministic hash exchange on the id
-    spreads it; inputs already at least as parallel pass through
-    untouched (scale-adaptive — on a real cluster scan, splits already
-    exceed the width and this is a no-op). Values are unchanged: only
-    row placement moves."""
-    spark = df.sparkSession
-    try:
-        target = max(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            spark.sparkContext.defaultParallelism,
-        )
-    except Exception:
-        target = spark.sparkContext.defaultParallelism
-    from pyspark.sql import functions as F
-
-    # Size gate first: below ~4 MB of estimated input the exchange costs
-    # more than the parallelism it buys (measured ~1 s on the sf0.1
-    # dedup family). The optimizer's logical size estimate is file-size
-    # based for scans and free to read (no job) — unlike
-    # df.rdd.getNumPartitions(), which EXECUTES every upstream shuffle
-    # stage under AQE (measured: one extra job per probe). When the
-    # estimate is unavailable, spread: at 100-TB scale the narrow-input
-    # case is the one that hurts.
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        est = None
-    if est is not None and 0 <= est < 4 * 1024 * 1024:
-        return df
-    # UNCONDITIONAL repartition otherwise: inputs that are already an
-    # explicit hash fan-out on the same key collapse with this node
-    # (CollapseRepartition) into a single exchange — so the
-    # already-wide case costs one shuffle of the rows the extraction
-    # was about to traverse anyway, and the narrow case (lake bucket
-    # reads, changelog diffs) gains core-count parallelism.
-    return df.repartition(target, F.col(id_col))
-
-
 def unpersist_intermediates() -> int:
     """Unpersist every registered intermediate (non-blocking); returns
     the number released. Safe to call at any time — a DataFrame whose

@@ -8,16 +8,17 @@ Scale design:
   self-join (equal blocking key) + array intersection math. Quadratic per
   block; at 100 TB use the LSH path and keep this for verification
   samples.
-* **MinHash + LSH** — the scale path: k permutations via seeded xxhash64
-  over shingles (one pass, `transform`/`aggregate`, no UDF), banded into
-  b bands × r rows; candidates = pairs sharing any band bucket. The band
-  join and the pair dedup run on SLIM (id, band, bucket) rows only — the
-  shingle arrays are joined back once per unique candidate pair (both
-  join-backs key on the same id column, so the array-side exchange is
-  reused / AQE-broadcast; arrays never ride the band-duplication shuffle).
+* **MinHash + LSH** — the scale path: k affine universal-hash
+  permutations over md5-derived shingle keys (an Arrow/numpy pass,
+  operators/sketch_np.py), banded into b bands × r rows; candidates =
+  pairs sharing any band bucket. The band join and the pair dedup run
+  on SLIM (id, band, bucket) rows only — the shingle arrays are joined
+  back once per unique candidate pair (both join-backs key on the same
+  id column, so the array-side exchange is reused / AQE-broadcast;
+  arrays never ride the band-duplication shuffle).
 * **SimHash** — 60-bit sketch from md5-prefix word hashes (reproducible
-  in the SQL oracle), built in ONE array pass (a single `aggregate` with
-  a 60-counter accumulator — not 60 traversals); near-dups = sketches
+  in the SQL oracle), built in one vectorized Arrow/numpy pass;
+  near-dups = sketches
   within Hamming distance d. Candidate generation is generalized
   multi-index banding: split into `bands` sub-bands, a pair at distance
   ≤ d shares ≥ bands-d of them (pigeonhole), so candidates join on every
@@ -34,13 +35,8 @@ from itertools import combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import policy
 from .text import fingerprint_md5, normalized, words
-
-
-def _use_arrow() -> bool:
-    from .sketch_np import use_arrow_sketches
-
-    return use_arrow_sketches()
 
 
 def _maybe_persist(df: DataFrame, enabled: bool) -> DataFrame:
@@ -217,53 +213,46 @@ def affine_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature(sh_col, num_hashes: int = 32, seed: int = 7, hash_scheme: str = "affine"):
-    """k min-hashes over the shingle array in ONE traversal: a single
-    `aggregate` whose accumulator is the array of running minima, updated
-    per element with `zip_with` against the per-permutation parameters —
-    instead of k separate array_min passes (k× the traversals and k
-    expression nodes). Pure Catalyst, array<long> signature.
+def minhash_signature(sh_col, num_hashes: int = 32, seed: int = 7):
+    """k min-hashes over the shingle array, array<long>. Permutation i
+    is the affine universal hash (a_i·(s & 2^31−1) + b_i) mod (2^61−1)
+    over the (already md5-derived) shingle keys: pure 64-bit integer
+    multiply-add-mod, NO per-seed hashing or string work, overflow-free
+    under ANSI (product < 2^62), and digit-for-digit reproducible in
+    DuckDB — the WHOLE LSH output is oracle-checked.
 
-    hash_scheme:
-    * ``affine`` (default) — permutation i is the affine universal hash
-      (a_i·(s & 2^31−1) + b_i) mod (2^61−1) over the (already md5-derived)
-      shingle keys: pure 64-bit integer multiply-add-mod, NO per-seed
-      hashing or string work, overflow-free under ANSI (product < 2^62),
-      and digit-for-digit reproducible in DuckDB — the WHOLE LSH output
-      is oracle-checked. Also the cheapest scheme (measured ~6× faster
-      than per-seed md5, faster than seeded xxhash64).
-    * ``xxhash`` — seeded xxhash64 per (shingle, seed), kept for
-      comparison/portability of old signatures.
-    """
-    if hash_scheme == "xxhash":
-        seeds = F.array(*[F.lit(seed + i) for i in range(num_hashes)])
-        perm = lambda s, p: F.xxhash64(s, p)  # noqa: E731
-    elif _use_arrow():
-        # r06: the fold below is CodegenFallback (interpreted per
-        # element, fresh k-array accumulator per step — ~5 ms core time
-        # per document at sf1.0); the numpy twin computes bit-identical
-        # values vectorized over Arrow batches (guide §4.2). Catalyst
-        # fold retained behind SPARK_GRAFT_SKETCH_ENGINE=catalyst and
-        # pinned equivalent in tests/test_sketch_np.py.
-        from .sketch_np import minhash_signature_np
+    r06: computed by the Arrow/numpy twin (sketch_np.py), vectorized over
+    Arrow batches (guide §4.2). The Catalyst fold it replaced,
+    ``_minhash_fold``, is CodegenFallback (interpreted per element, a
+    fresh k-array accumulator per step — ~5 ms core time per document at
+    sf1.0); it stays only as the reference tests/test_sketch_np.py pins
+    the twin against."""
+    from .sketch_np import minhash_signature_np
 
-        return minhash_signature_np(sh_col, num_hashes, seed)
-    else:
-        params = F.array(
-            *[
-                F.struct(F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b"))
-                for a, b in affine_params(num_hashes, seed)
-            ]
-        )
-        seeds = params
-        perm = lambda s, p: F.pmod(  # noqa: E731
-            p["a"] * s.bitwiseAND(F.lit(_MASK31)) + p["b"], F.lit(MERSENNE61)
-        )
+    return minhash_signature_np(sh_col, num_hashes, seed)
+
+
+def _minhash_fold(sh_col, num_hashes: int = 32, seed: int = 7):
+    """Pure-Catalyst :func:`minhash_signature`: ONE `aggregate` whose
+    accumulator is the array of running minima, updated per element with
+    `zip_with` against the per-permutation parameters."""
+    params = F.array(
+        *[
+            F.struct(F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b"))
+            for a, b in affine_params(num_hashes, seed)
+        ]
+    )
     init = F.array_repeat(F.lit((1 << 63) - 1).cast("long"), num_hashes)
     return F.aggregate(
         sh_col,
         init,
-        lambda acc, s: F.zip_with(acc, seeds, lambda a, p: F.least(a, perm(s, p))),
+        lambda acc, s: F.zip_with(
+            acc,
+            params,
+            lambda a, p: F.least(
+                a, F.pmod(p["a"] * s.bitwiseAND(F.lit(_MASK31)) + p["b"], F.lit(MERSENNE61))
+            ),
+        ),
     )
 
 
@@ -276,27 +265,23 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     seed: int = 7,
-    hash_scheme: str = "affine",
     persist_intermediate: bool = True,
 ) -> DataFrame:
     """Candidate pairs sharing ≥1 LSH band bucket, then exact-Jaccard
     verified at `threshold`. Near-linear: the only wide operations are the
     band-bucket shuffle and the candidate join.
 
-    With the default affine hash scheme (integer universal hashing over
-    the md5-derived shingle keys) the ENTIRE output — candidate
-    generation included — is reproducible in DuckDB SQL AND it is the
-    cheapest scheme; see the minhash_lsh oracle in __spark_entry__."""
-    from .cache import spread_scan
-
+    The affine signatures and string band keys make the ENTIRE output —
+    candidate generation included — reproducible in DuckDB SQL; see the
+    minhash_lsh oracle in __spark_entry__."""
     rows = num_hashes // bands
     # r06: lake-table snapshots read as one file per bucket — without a
     # fan-out the shingle+signature extraction runs on ~num_buckets
-    # tasks (see cache.spread_scan; no-op for already-parallel inputs)
-    df = spread_scan(df, id_col)
+    # tasks (see policy.spread)
+    df = policy.spread(df, id_col)
     base = df.select(
         F.col(id_col), shingle_keys(F.col(text_col), n).alias("sh")
-    ).withColumn("sig", minhash_signature(F.col("sh"), num_hashes, seed, hash_scheme))
+    ).withColumn("sig", minhash_signature(F.col("sh"), num_hashes, seed))
     # ONE materialization of the text → shingles → signature extraction:
     # persisted before the emptiness filter (pushdown would re-inline the
     # extraction into the scan filter) and shared by the two band-join
@@ -307,12 +292,9 @@ def minhash_lsh_pairs(
     sh = sig
 
     def bucket_key(bi: int):
-        key = F.concat_ws(
+        return F.concat_ws(
             ",", *[F.col("sig")[bi * rows + j].cast("string") for j in range(rows)]
         )
-        # oracle scheme keeps the raw string key (DuckDB-reproducible);
-        # the scale scheme hashes it to 8 bytes to slim the shuffle
-        return F.xxhash64(key) if hash_scheme == "xxhash" else key
 
     banded = sig.select(
         id_col,
@@ -344,11 +326,13 @@ def minhash_lsh_pairs(
     # r06 exact size-ratio prefilter BEFORE the array join-back:
     # J = I/U with I <= min(|A|,|B|) and U >= max(|A|,|B|), and IEEE
     # division of exact integers is monotone in each operand, so
-    # float(I/U) <= float(min/max); a candidate with min/max < tau
-    # cannot pass the verify comparison and is dropped on SLIM rows
-    # (two broadcast joins of the vocabulary-sized (id, size) table)
-    # before the shingle arrays ever move. No false negatives by the
-    # same monotonicity the verify itself compares with.
+    # float(I/U) <= float(min/max), and rounding to 6 places is monotone
+    # too: round(I/U, 6) <= round(min/max, 6). The verify keeps
+    # round(J, 6) >= tau, so a candidate with round(min/max, 6) < tau
+    # cannot pass it and is dropped on SLIM rows (two broadcast joins of
+    # the vocabulary-sized (id, size) table) before the shingle arrays
+    # ever move. Comparing the UNROUNDED ratio would drop pairs whose
+    # ratio rounds up to tau (e.g. 2/3 at tau=0.666667).
     sizes = sh.select(F.col(id_col), F.size("sh").alias("__sz"))
     cand = (
         cand.join(
@@ -360,8 +344,11 @@ def minhash_lsh_pairs(
             "id_b",
         )
         .filter(
-            F.least("__sza", "__szb").cast("double")
-            / F.greatest("__sza", "__szb").cast("double")
+            F.round(
+                F.least("__sza", "__szb").cast("double")
+                / F.greatest("__sza", "__szb").cast("double"),
+                6,
+            )
             >= F.lit(threshold)
         )
         .select("id_a", "id_b")
@@ -390,19 +377,22 @@ def word_hashes60(col):
 
 def simhash60(hashes):
     """60-bit SimHash: bit b of the sketch = majority of bit b across the
-    word hashes. ONE traversal of the hash array — a single `aggregate`
-    with an array-of-60-counters accumulator (zip_with add per element) —
-    instead of 60 separate aggregate passes; the plan is one expression
-    node, so whole-stage codegen never sees a 60-branch tree.
+    word hashes.
 
-    r06: that fold is still CodegenFallback — interpreted, ~60 inner
-    lambda evaluations per array element. The numpy twin (bit unpack +
-    per-row segment sums over Arrow batches) computes the identical
-    sketch and is the default; see sketch_np.py."""
-    if _use_arrow():
-        from .sketch_np import simhash60_np
+    r06: computed by the Arrow/numpy twin (bit unpack + per-row segment
+    sums over Arrow batches; sketch_np.py). The Catalyst fold it
+    replaced, ``_simhash_fold``, is CodegenFallback — interpreted, ~60
+    inner lambda evaluations per array element; it stays only as the
+    reference tests/test_sketch_np.py pins the twin against."""
+    from .sketch_np import simhash60_np
 
-        return simhash60_np(hashes)
+    return simhash60_np(hashes)
+
+
+def _simhash_fold(hashes):
+    """Pure-Catalyst :func:`simhash60`: ONE traversal of the hash array —
+    a single `aggregate` with an array-of-60-counters accumulator
+    (zip_with add per element)."""
     weights = F.array(*[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS)])
     zeros = F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS)
     counts = F.aggregate(
@@ -456,10 +446,8 @@ def simhash_pairs(
 
     # sketch table materialized ONCE (persist before the emptiness
     # filter — see _maybe_persist); both band-join branches read it.
-    # spread_scan: see minhash_lsh_pairs (no-op for parallel inputs)
-    from .cache import spread_scan
-
-    df = spread_scan(df, id_col)
+    # spread: see minhash_lsh_pairs
+    df = policy.spread(df, id_col)
     s = (
         df.select(F.col(id_col), word_hashes60(F.col(text_col)).alias("wh"))
         .select(id_col, F.size("wh").alias("__n"), simhash60(F.col("wh")).alias("sim"))
@@ -496,12 +484,12 @@ def simhash_pairs(
     # * salted self-join — the probe side carries chunk = hash(id) mod
     #   S, the build side replicates each row S ways, and the join keys
     #   on (bk, chunk): identical pair multiset, hot buckets split S
-    #   ways across tasks. S defaults to the core count for the q=1
+    #   ways across tasks. S defaults to policy.salt for the q=1
     #   any-band scheme (2^15 buckets, hot buckets expected); for q>1
     #   the keyspace is large enough that buckets stay tiny and the S x
     #   build-side duplication would dominate, so the default is 1.
     if salt is None:
-        salt = df.sparkSession.sparkContext.defaultParallelism if q == 1 else 1
+        salt = policy.salt(df.sparkSession) if q == 1 else 1
     slim = s.select(
         id_col, "sim", F.posexplode(keys).alias("ci", "bk")
     )

@@ -137,7 +137,7 @@ def incremental_dedup_pass(
     )
     deleted = ch.filter(F.col("_change_type") == "delete").select(F.col(id_col))
 
-    # NOTE r06: a spread_scan fan-out was tried on this stage and the
+    # NOTE r06: a policy.spread fan-out was tried on this stage and the
     # verify re-shingle below and measured ~12 s SLOWER end-to-end on
     # the sf1 lifecycle (the churn frames are modest and already flow
     # into exchanges; the extra repartitions only added barriers) — the

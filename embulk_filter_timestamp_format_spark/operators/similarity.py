@@ -27,6 +27,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import policy
+
 
 def _dot(a, b, dim: "int | None" = None):
     """Float64 dot product, left-to-right accumulation.
@@ -75,12 +77,8 @@ def _peek_dim(df: DataFrame, vec_col: str) -> "int | None":
     plan) exceed what it saves — measured +1.2 s on embedding_topk at
     sf0.1 vs a ~1.5x win at sf1 (and the 100x IVF-assignment win only
     materializes at scale). Returning None selects the HOF fold."""
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        if 0 <= est < 4 * 1024 * 1024:
-            return None
-    except Exception:
-        pass
+    if policy.below_gate(df):
+        return None
     row = df.select(F.size(F.col(vec_col)).alias("d")).first()
     d = row["d"] if row is not None else None
     return int(d) if d is not None and d > 0 else None
@@ -239,9 +237,7 @@ def _ivf_assign(
     # base.rdd.getNumPartitions() probe executed the upstream exchange
     # as an extra job under AQE, and an already-spread input now
     # collapses with this node (CollapseRepartition) instead.
-    from .cache import spread_scan
-
-    base = spread_scan(df, id_col).select(
+    base = policy.spread(df, id_col).select(
         F.col(id_col), F.col(vec_col), _norm(F.col(vec_col), dim).alias("_nrm")
     )
     # the (id, vector, norm) table is the IVF build artifact — it is
@@ -365,10 +361,10 @@ def semantic_dedup(
     #   projection instead.
     # * salted self-join — duplicate-heavy corpora assign all copies to
     #   one centroid, so one cluster's m^2 pair loop landed on a single
-    #   task; chunking the probe side by hash(id) mod cores and
+    #   task; chunking the probe side by hash(id) mod policy.salt and
     #   replicating the build side spreads it without changing the pair
     #   multiset.
-    salt = df.sparkSession.sparkContext.defaultParallelism
+    salt = policy.salt(df.sparkSession)
     a = assigned.select(
         "cid",
         F.col(id_col).alias("id_a"),

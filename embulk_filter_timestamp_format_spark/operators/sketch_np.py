@@ -19,9 +19,10 @@ These pandas UDFs compute bit-identical values with numpy:
 * the UDFs are pure functions of their input column, so plans keep the
   same shape (one projection column) and the SQL oracles are untouched.
 
-Equivalence with the Catalyst fold is pinned in
-tests/test_sketch_np.py; every dedup-family oracle exercises the values
-end-to-end against DuckDB.
+They are the only sketch kernels the operators run. Equivalence with
+the Catalyst folds (``dedup._minhash_fold`` / ``dedup._simhash_fold``)
+is pinned in tests/test_sketch_np.py; every dedup-family oracle
+exercises the values end-to-end against DuckDB.
 """
 
 from __future__ import annotations
@@ -134,11 +135,3 @@ def simhash60_np(hashes_col):
 
     return _sim(hashes_col)
 
-
-def use_arrow_sketches() -> bool:
-    """Feature gate for the Arrow sketch twins — on by default; set
-    ``spark_graft.sketch.engine=catalyst`` in the environment to force
-    the pure-Catalyst folds (debugging / environments without pandas)."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_SKETCH_ENGINE", "arrow") != "catalyst"

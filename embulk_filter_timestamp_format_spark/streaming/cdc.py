@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import policy
 from ..lake import IceTable
 from ..plans import InvalidFlagPlan, TaskConfig, apply_task, invalid_filter
 from ..sources.binlog import BINLOG_SCHEMA
@@ -122,6 +123,13 @@ class InvalidRecordError(RuntimeError):
 
 _UNSET = object()  # sentinel (an 'if col == "x"' would build a Column)
 
+# Hot-key detection reads a sample of at most this many doc_ids. The key
+# distribution of a binlog is stable across micro-batches, so the probe
+# runs on the first batch and then every SKEW_PROBE_INTERVAL-th: the
+# probe action drops out of the per-batch serial floor.
+SKEW_SAMPLE_ROWS = 50_000
+SKEW_PROBE_INTERVAL = 8
+
 
 class CdcPipeline:
     """Binds a source dir, an IceTable target, and the coercion task."""
@@ -139,10 +147,6 @@ class CdcPipeline:
         num_source_partitions: int = 8,
         skew_detect: bool = True,
         skew_threshold: float = 0.05,
-        skew_sample_rows: int = 50_000,
-        skew_probe_interval: int = 8,
-        record_invalid: bool = True,
-        wholestage_codegen: bool = False,
     ):
         self.spark = spark
         self.table = table
@@ -159,30 +163,12 @@ class CdcPipeline:
         # per-batch count-based hot-key detection (SURVEY §4): when the
         # estimated share of the hottest doc_id exceeds skew_threshold,
         # the dedup aggregation runs with an explicit salt stage sized to
-        # the shuffle parallelism. salt_buckets > 0 forces it statically.
+        # the fan-out width (policy.width). salt_buckets > 0 forces it
+        # statically.
         self.skew_detect = skew_detect
         self.skew_threshold = skew_threshold
-        self.skew_sample_rows = skew_sample_rows
-        # the key distribution of a binlog is stable across micro-batches:
-        # probe on the first batch, then re-probe every Nth — the probe
-        # action (sampled key-count aggregate) drops out of the per-batch
-        # serial floor. 1 forces a probe every batch.
-        self.skew_probe_interval = max(skew_probe_interval, 1)
         self._batches_since_probe: "int | None" = None
         self._last_salt = 0
-        # record per-batch invalid-record counts in lineage (the
-        # observability twin of the reference's per-value WARN,
-        # ColumnVisitorImpl.java:90-97); also serves stop_on_invalid_record
-        self.record_invalid = record_invalid or stop_on_invalid_record
-        # Whole-stage codegen is DISABLED inside apply_batch by default:
-        # the inline multi-format parse cascade compiled to a >64 KB
-        # method under WSCG fusion (WSCG cannot split expression code
-        # whose inputs are locals) — every batch paid a failed janino
-        # compile then ran interpreted. The staged per-format projection
-        # no longer blows the limit, but per-operator codegen still
-        # measures equal-or-faster (alternating 2M-event replays:
-        # best 31.3 s off vs 35.7 s on), so the default stays off.
-        self.wholestage_codegen = wholestage_codegen
         self._proj = None
         self._out_cols = None
         self._invalid_plan = _UNSET
@@ -216,9 +202,9 @@ class CdcPipeline:
     def _detect_skew(self, batch_df: DataFrame, events: int) -> int:
         """Count-based hot-key detection on a bounded doc_id sample: the
         estimated hottest-key share ≥ skew_threshold engages the salted
-        dedup path, sized to the shuffle parallelism. Cost: one
-        column-pruned scan of doc_id (sampled) + a key-count aggregate."""
-        frac = min(1.0, self.skew_sample_rows / max(events, 1))
+        dedup path, sized to the fan-out width. Cost: one column-pruned
+        scan of doc_id (sampled) + a key-count aggregate."""
+        frac = min(1.0, SKEW_SAMPLE_ROWS / max(events, 1))
         keys = batch_df.select("doc_id")
         if frac < 1.0:
             keys = keys.sample(fraction=frac, seed=7)
@@ -227,12 +213,18 @@ class CdcPipeline:
         ).collect()[0]
         if not top["total"] or top["hot"] / top["total"] < self.skew_threshold:
             return 0
-        return int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        return policy.width(self.spark)
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> "int | None":
-        """foreachBatch body. Returns committed snapshot version."""
-        if self.wholestage_codegen:
-            return self._apply_batch(batch_df, batch_id)
+        """foreachBatch body. Returns committed snapshot version.
+
+        Whole-stage codegen is DISABLED inside the batch: the inline
+        multi-format parse cascade compiled to a >64 KB method under WSCG
+        fusion (WSCG cannot split expression code whose inputs are
+        locals) — every batch paid a failed janino compile then ran
+        interpreted. The staged per-format projection no longer blows the
+        limit, but per-operator codegen still measures equal-or-faster
+        (alternating 2M-event replays: best 31.3 s off vs 35.7 s on)."""
         prev = self.spark.conf.get("spark.sql.codegen.wholeStage", "true")
         self.spark.conf.set("spark.sql.codegen.wholeStage", "false")
         try:
@@ -252,7 +244,9 @@ class CdcPipeline:
         # configured string columns) — it feeds lineage observability AND
         # stop_on_invalid_record, so the abort path costs no extra scan.
         # (An Observation would be free-er, but Observation.get never
-        # resolves for foreachBatch micro-batch lineage.)
+        # resolves for foreachBatch micro-batch lineage.) The count is the
+        # observability twin of the reference's per-value WARN
+        # (ColumnVisitorImpl.java:90-97).
         aggs = [
             F.count(F.lit(1)).alias("events"),
             F.min("offset").alias("min_offset"),
@@ -260,22 +254,21 @@ class CdcPipeline:
             F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes"),
         ]
         stats_in = batch_df.select("offset", "op", "doc_id")
-        if self.record_invalid:
-            if self._invalid_plan is _UNSET:
-                # compiled once, reused across micro-batches. The flag is
-                # STAGED as two projections (one nanos column PER format,
-                # then a cheap attribute cascade): inlined directly under
-                # the hash aggregate the multi-format coalesce re-runs
-                # each later format's regex per field reference
-                # (conditional-context CSE defeat) AND exceeds janino's
-                # 64 KB method limit, de-optimizing the stage
-                plan = InvalidFlagPlan(
-                    batch_df.schema, self.task, ["offset", "op", "doc_id"]
-                )
-                self._invalid_plan = plan if plan.can_fail else None
-            if self._invalid_plan is not None:
-                stats_in = self._invalid_plan.apply(batch_df)
-                aggs.append(F.sum(InvalidFlagPlan.FLAG).alias("invalid"))
+        if self._invalid_plan is _UNSET:
+            # compiled once, reused across micro-batches. The flag is
+            # STAGED as two projections (one nanos column PER format,
+            # then a cheap attribute cascade): inlined directly under
+            # the hash aggregate the multi-format coalesce re-runs
+            # each later format's regex per field reference
+            # (conditional-context CSE defeat) AND exceeds janino's
+            # 64 KB method limit, de-optimizing the stage
+            plan = InvalidFlagPlan(
+                batch_df.schema, self.task, ["offset", "op", "doc_id"]
+            )
+            self._invalid_plan = plan if plan.can_fail else None
+        if self._invalid_plan is not None:
+            stats_in = self._invalid_plan.apply(batch_df)
+            aggs.append(F.sum(InvalidFlagPlan.FLAG).alias("invalid"))
         # per-source-partition lineage in the SAME pass (north-rule
         # granularity): partition = key-hash mod P, the assignment a keyed
         # CDC stream (e.g. key-partitioned Kafka topic) would carry. The
@@ -345,7 +338,7 @@ class CdcPipeline:
                 r["__hi"] if hi is None else max(hi, r["__hi"]),
             )
         pstats = sorted(pstats_by_part.values(), key=lambda p: p["__part"])
-        probe_rows = [(b, lo, hi) for b, (lo, hi) in env.items()]
+        probe_rows = (t_buckets, [(b, lo, hi) for b, (lo, hi) in env.items()])
         n_bad = sum(r.get("invalid") or 0 for r in pstats)
         if self.task.stop_on_invalid_record and n_bad:
             raise InvalidRecordError(
@@ -358,7 +351,7 @@ class CdcPipeline:
         if self.skew_detect and not salt:
             if (
                 self._batches_since_probe is None
-                or self._batches_since_probe >= self.skew_probe_interval
+                or self._batches_since_probe >= SKEW_PROBE_INTERVAL
             ):
                 self._last_salt = self._detect_skew(batch_df, events)
                 self._batches_since_probe = 0

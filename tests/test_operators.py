@@ -57,6 +57,29 @@ def test_minhash_lsh_contained_in_exact_and_recall(spark, docs):
         assert recall >= 0.8, f"LSH recall {recall} on {len(exact_all)} true pairs"
 
 
+def test_minhash_lsh_size_prefilter_keeps_rounded_boundary(spark):
+    """A ⊂ B with |A| = 6 and |B| = 7 shingles: J = 6/7 = 0.8571428…,
+    which rounds UP to 0.857143, so the verify keeps the pair at that
+    threshold. The size-ratio prefilter must compare the same rounded
+    ratio and not drop the pair first."""
+    words = [f"w{i}" for i in range(9)]
+    df = spark.createDataFrame(
+        [(1, " ".join(words[:8])), (2, " ".join(words))], "doc_id long, text string"
+    )
+    t = 0.857143
+    exact = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in D.ngram_jaccard_pairs(df.withColumn("lang", F.lit("x")), threshold=t).collect()
+    }
+    assert exact == {(1, 2): t}
+    # one signature row per band: any agreeing minhash makes a candidate
+    lsh = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in D.minhash_lsh_pairs(df, threshold=t, bands=32).collect()
+    }
+    assert lsh == exact
+
+
 def test_minhash_signature_distinct_permutations(spark):
     """Regression: each permutation must hash differently (a degenerate
     signature array collapses all bands to one bucket)."""
@@ -65,11 +88,6 @@ def test_minhash_signature_distinct_permutations(spark):
         D.minhash_signature(D.shingle_keys(F.col("text")), 8).alias("sig")
     ).collect()[0]["sig"]
     assert len(set(sig)) > 1
-    # xxhash scheme keeps working too
-    sigx = df.select(
-        D.minhash_signature(D.shingle_keys(F.col("text")), 8, hash_scheme="xxhash").alias("s")
-    ).collect()[0]["s"]
-    assert len(set(sigx)) > 1
 
 
 def test_simhash_invariants(spark, docs):

@@ -293,3 +293,67 @@ def test_compaction_folds_legacy_deltas(spark, binlog_dir, tmp_path):
     assert all(_entry_gen(f, 8) == 8 for f in snap["files"])
     assert _state(table) == before
     assert table.changes(v_pre, v).count() == 0
+
+
+# ------------------------------------------- stale probe rows (rebucket race)
+
+
+@pytest.mark.parametrize("race", ["before_merge", "during_write"])
+def test_stale_probe_rows_across_rebucket_match_control(
+    spark, binlog_dir, tmp_path, race
+):
+    """The pipeline harvests the batch's probe rows (touched buckets and
+    key envelopes) under 8 buckets. A concurrent rebucket(16) plus one
+    merge at 16 buckets then commits — before the batch's merge reads its
+    snapshot (first pass) or while it writes (commit conflict, retry).
+    The merge at 16 leaves current-generation files behind: legacy files
+    span both of their new buckets and would hide a stale probe. Bucket
+    ids from 8 must not steer a merge into the 16-bucket snapshot, so the
+    final state equals a control whose last merge probes for itself."""
+    chunks = _chunks(binlog_dir)
+    table, control = (
+        IceTable.create(
+            spark, str(tmp_path / name), TARGET_SCHEMA, key="doc_id",
+            num_buckets=8,
+        )
+        for name in ("race", "control")
+    )
+    for t in (table, control):
+        CdcPipeline(spark, t).replay_chunks(chunks[:2])
+    ids = [r["doc_id"] for r in table.read().select("doc_id").collect()]
+
+    def concurrent_writer(t, merge):
+        t.rebucket(16)
+        merge(_payload(spark, ids, 10**9), source="other")
+
+    calls = []
+    merge_into = table.merge_into
+
+    def recording_merge(*args, **kwargs):
+        calls.append((args, kwargs))
+        if race == "before_merge":
+            concurrent_writer(table, merge_into)
+        return merge_into(*args, **kwargs)
+
+    table.merge_into = recording_merge
+    if race == "during_write":
+        write_files = table._write_data_files
+
+        def racing_write(*args, **kwargs):
+            table._write_data_files = write_files
+            concurrent_writer(table, merge_into)
+            return write_files(*args, **kwargs)
+
+        table._write_data_files = racing_write
+    CdcPipeline(spark, table).replay_chunks(chunks[2:3], start_batch=2)
+    table.merge_into = merge_into
+
+    (args, kwargs), = calls
+    assert kwargs["probe_rows"] is not None
+    concurrent_writer(control, control.merge_into)
+    control.merge_into(
+        *args, **{k: v for k, v in kwargs.items() if k != "probe_rows"}
+    )
+    assert table.snapshot()["spec"]["num_buckets"] == 16
+    assert table.read().count() == control.read().count()
+    assert _state(table) == _state(control)

@@ -2,12 +2,12 @@
 
 The r06 optimization swapped the interpreted HOF folds (MinHash
 signature, SimHash majority vote) for vectorized pandas UDFs
-(operators/sketch_np.py). These tests pin bit-identical values across
-both engines, including the degenerate rows (empty text, null text,
-single word) whose fold-over-nothing semantics are easy to get wrong.
+(operators/sketch_np.py). The folds are kept as private references
+(``dedup._minhash_fold`` / ``dedup._simhash_fold``); these tests pin
+bit-identical values between them and the public sketch functions,
+including the degenerate rows (empty text, null text, single word)
+whose fold-over-nothing semantics are easy to get wrong.
 """
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -35,27 +35,19 @@ def sketch_inputs(spark):
     )
 
 
-def _collect_both(df, build):
-    prev = os.environ.get("SPARK_GRAFT_SKETCH_ENGINE")
-    try:
-        os.environ["SPARK_GRAFT_SKETCH_ENGINE"] = "catalyst"
-        cat = {r["doc_id"]: r["v"] for r in build(df).collect()}
-        os.environ["SPARK_GRAFT_SKETCH_ENGINE"] = "arrow"
-        arw = {r["doc_id"]: r["v"] for r in build(df).collect()}
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_SKETCH_ENGINE", None)
-        else:
-            os.environ["SPARK_GRAFT_SKETCH_ENGINE"] = prev
-    return cat, arw
+def _collect_both(df, fold, sketch, col):
+    def run(fn):
+        return {
+            r["doc_id"]: r["v"]
+            for r in df.select("doc_id", fn(F.col(col)).alias("v")).collect()
+        }
+
+    return run(fold), run(sketch)
 
 
 def test_minhash_signature_engines_identical(sketch_inputs):
     cat, arw = _collect_both(
-        sketch_inputs,
-        lambda df: df.select(
-            "doc_id", D.minhash_signature(F.col("sh")).alias("v")
-        ),
+        sketch_inputs, D._minhash_fold, D.minhash_signature, "sh"
     )
     assert cat.keys() == arw.keys()
     for k in cat:
@@ -65,10 +57,7 @@ def test_minhash_signature_engines_identical(sketch_inputs):
 
 
 def test_simhash60_engines_identical(sketch_inputs):
-    cat, arw = _collect_both(
-        sketch_inputs,
-        lambda df: df.select("doc_id", D.simhash60(F.col("wh")).alias("v")),
-    )
+    cat, arw = _collect_both(sketch_inputs, D._simhash_fold, D.simhash60, "wh")
     assert cat == arw
 
 
