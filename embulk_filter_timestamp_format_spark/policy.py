@@ -24,7 +24,7 @@ def width(spark: SparkSession) -> int:
     )
 
 
-def est_bytes(df: DataFrame) -> "int | None":
+def _est_bytes(df: DataFrame) -> "int | None":
     """The optimizer's ``sizeInBytes`` (file sizes for scans). Reading it
     plans but runs no job; None when it is unavailable."""
     try:
@@ -36,7 +36,7 @@ def est_bytes(df: DataFrame) -> "int | None":
 def below_gate(df: DataFrame) -> bool:
     """``df`` is known to be under ``SPREAD_MIN_BYTES``. An unknown size
     counts as large: the narrow-input case is the one that hurts."""
-    est = est_bytes(df)
+    est = _est_bytes(df)
     return est is not None and est < SPREAD_MIN_BYTES
 
 

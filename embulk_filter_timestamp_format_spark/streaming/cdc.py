@@ -215,6 +215,13 @@ class CdcPipeline:
             return 0
         return policy.width(self.spark)
 
+    @property
+    def wholestage_codegen(self) -> bool:
+        """Whether whole-stage codegen is on inside apply_batch: never (see
+        there). Read-only, so a harness that times one stage alone can run
+        it under the same setting."""
+        return False
+
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> "int | None":
         """foreachBatch body. Returns committed snapshot version.
 
@@ -226,7 +233,9 @@ class CdcPipeline:
         limit, but per-operator codegen still measures equal-or-faster
         (alternating 2M-event replays: best 31.3 s off vs 35.7 s on)."""
         prev = self.spark.conf.get("spark.sql.codegen.wholeStage", "true")
-        self.spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        self.spark.conf.set(
+            "spark.sql.codegen.wholeStage", str(self.wholestage_codegen).lower()
+        )
         try:
             return self._apply_batch(batch_df, batch_id)
         finally:

@@ -53,13 +53,12 @@ def test_width_is_max_of_shuffle_width_and_cores(spark, shuffle_partitions):
     assert policy.width(spark) == cores + 2
 
 
-def test_est_bytes_and_spread_run_no_job(spark, tmp_path):
+def test_gate_and_spread_run_no_job(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     spark.range(1000).write.parquet(path)
     df = spark.read.parquet(path)  # schema inference may run a job
-    est, jobs = _jobs(spark, lambda: policy.est_bytes(df))
-    assert jobs == 0
-    assert 0 < est < policy.SPREAD_MIN_BYTES
+    below, jobs = _jobs(spark, lambda: policy.below_gate(df))
+    assert (below, jobs) == (True, 0)
     for src in (df, spark.range(_BIG_ROWS)):
         _, jobs = _jobs(spark, lambda: policy.spread(src, "id"))
         assert jobs == 0
@@ -73,7 +72,7 @@ def test_spread_exchange_only_above_gate(spark, shuffle_partitions):
     assert _hash_exchanges(policy.spread(small, "id")) == []
 
     big = spark.range(_BIG_ROWS)
-    assert policy.est_bytes(big) >= policy.SPREAD_MIN_BYTES
+    assert not policy.below_gate(big)
     assert _hash_exchanges(policy.spread(big, "id")) == [policy.width(spark)]
 
 
