@@ -21,7 +21,16 @@ Guarantees (the Iceberg subset the north rule uses):
 * **snapshot isolation / time travel** — readers pin a version; files are
   immutable; `read(version=...)`.
 * **atomic commit** — `open(path, 'x')` exclusive create of v<N>.json is
-  the commit point; losers of a race retry on the next version.
+  the commit point, and every write goes through one protocol
+  (``IceTable._commit``). A loser of a race re-reads the log and re-checks
+  its batch-id fence, then rebases the same data files onto the winner
+  when its plan's *guard* allows, else deletes them and re-plans. The
+  guard names the buckets whose file set (and the bucket count) must be
+  unchanged: ``append`` ∅ (always rebase); copy-on-write ``merge_into``
+  its touched buckets; merge-on-read ``merge_into``, ``compact``,
+  ``migrate_buckets``, ``rebucket`` and ``evolve_schema`` None (always
+  re-plan); ``publish_branch`` re-plans into its fast-forward check, so
+  it raises once main has advanced.
 * **idempotent batch-id fencing** — `merge_into(..., batch_id=)` is a
   no-op when the batch id was already applied for that source (duplicate
   micro-batch delivery / restart replay → exactly-once table state).
@@ -55,8 +64,8 @@ import math
 import os
 import re
 import shutil
-import time
 import uuid
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -107,11 +116,6 @@ def _stats_bound(value, lower: bool):
     if isinstance(value, _dt.date):
         return value.isoformat(), "date"  # ISO order == lexicographic order
     return None, None
-
-
-# cumulative wall seconds spent harvesting footer stats in this process —
-# read by perf scripts to attribute replay cost to the manifest feature
-HARVEST_SECONDS = 0.0
 
 
 def _footer_column_stats(abs_path: str, cols: "list[str] | None"):
@@ -221,6 +225,23 @@ class CommitConflict(Exception):
 
 
 MAX_COMMIT_RETRIES = 5
+
+
+@dataclass
+class _Plan:
+    """One commit planned against one snapshot: the snapshot's files it
+    drops (``remove``, paths), the entries it adds, snapshot-level
+    overrides (``meta``: spec / schema / schema_version) and summary keys.
+    ``written`` lists the data files the plan wrote; those not in ``add``
+    are deleted once the commit lands, all of them when it is abandoned.
+    ``guard`` is the race rule — see ``IceTable._commit``."""
+
+    guard: "frozenset | set | None"
+    add: list = field(default_factory=list)
+    remove: set = field(default_factory=set)
+    meta: dict = field(default_factory=dict)
+    summary: dict = field(default_factory=dict)
+    written: list = field(default_factory=list)
 
 
 # ----------------------------------------------------------------------
@@ -928,11 +949,9 @@ class IceTable:
     def _bucket_expr(self, key: str, num_buckets: int):
         return F.pmod(F.xxhash64(F.col(key)), F.lit(num_buckets)).cast("int")
 
-    def _write_data_files(
-        self, df: DataFrame, key: str, num_buckets: int, schema_version: int,
-        delta: bool = False,
-    ):
-        """Write df bucketed by key; returns file entries for the snapshot.
+    def _write_data_files(self, df: DataFrame, snap: dict, delta: bool = False):
+        """Write df bucketed by key under `snap`'s spec and schema version;
+        returns file entries for the snapshot.
 
         One output dir per write; files are registered with their bucket so
         later merges prune by bucket. Co-locates each bucket in one file
@@ -941,7 +960,9 @@ class IceTable:
         """
         tag = uuid.uuid4().hex[:12]
         out_dir = os.path.join(self.data_dir, tag)
-        spec = self.snapshot()["spec"]
+        spec = snap["spec"]
+        key, num_buckets = spec["key"], spec["num_buckets"]
+        schema_version = snap["schema_version"]
         codec = spec.get("codec", "snappy")
         stats_cols = spec.get("stats_cols", "auto")
         with_bucket = df.withColumn("__bucket", self._bucket_expr(key, num_buckets))
@@ -1011,15 +1032,12 @@ class IceTable:
             # and pyarrow releases the GIL around it, so a sequential loop
             # serializes ~num_buckets reads per commit. On local disk the
             # whole harvest is noise either way (0.26 s of a ~30 s
-            # 8M-event replay, measured via HARVEST_SECONDS — the
-            # manifest-stats A/B write-up in BENCH/NOTES.md round 4); the
-            # concurrency is for object stores, where these become the
-            # same ranged GETs an Iceberg committer issues per data file
-            # at ~10-100 ms each.
+            # 8M-event replay — the manifest-stats A/B write-up in
+            # BENCH/NOTES.md round 4); the concurrency is for object
+            # stores, where these become the same ranged GETs an Iceberg
+            # committer issues per data file at ~10-100 ms each.
             from concurrent.futures import ThreadPoolExecutor
 
-            global HARVEST_SECONDS
-            t0 = time.time()
             want = None if stats_cols == "auto" else stats_cols
             with ThreadPoolExecutor(max_workers=min(16, len(entries))) as ex:
                 harvested = list(
@@ -1034,7 +1052,6 @@ class IceTable:
                 entry["rows"] = rows
                 if stats:
                     entry["stats"] = stats
-            HARVEST_SECONDS += time.time() - t0
         return entries
 
     def _remove_files(self, entries: list[dict]) -> None:
@@ -1045,32 +1062,112 @@ class IceTable:
             except OSError:
                 pass
 
-    def append(self, df: DataFrame, batch_id: "int | None" = None, source: str = "default") -> int:
+    def _commit(
+        self,
+        operation: str,
+        plan,
+        batch_id: "int | None" = None,
+        source: str = "default",
+    ) -> "int | None":
+        """The one commit protocol of every table write.
+
+        Reads the snapshot once, applies the batch-id fence, and calls
+        ``plan(snap)`` for a :class:`_Plan` (or None: nothing to commit,
+        returned as None). The child snapshot is ``snap``'s files minus
+        ``plan.remove`` plus ``plan.add``, committed by exclusive create.
+        On :class:`CommitConflict` the log is re-read and the fence
+        re-checked; then the plan's guard decides:
+
+        * ``∅`` — rebase: the same data files commit onto the winner;
+        * a bucket set — rebase only when the winner left the bucket count
+          and the file set covering those buckets unchanged (the
+          copy-on-write validation rule: a winner that rewrote a touched
+          bucket invalidated the merge input);
+        * ``None`` — delete the plan's files and re-plan on the winner.
+
+        At most MAX_COMMIT_RETRIES plans, each with at most
+        MAX_COMMIT_RETRIES commit attempts (a plan out of attempts is
+        dropped like a stale one). Any other error from the commit
+        propagates and leaves the written files for
+        ``expire_snapshots``'s orphan scan, as a crash would."""
+        def fenced(snap):
+            return batch_id is not None and self._fenced(snap, source, batch_id)
+
         snap = self.snapshot()
-        if batch_id is not None and self._fenced(snap, source, batch_id):
-            return snap["version"]
-        spec = snap["spec"]
-        entries = self._write_data_files(
-            df, spec["key"], spec["num_buckets"], snap["schema_version"]
-        )
-        # commit loop: appends never invalidate each other — on a lost
-        # race, re-read the latest snapshot, re-check the fence, and
-        # re-commit the same (immutable) data files on top of it.
-        for _ in range(MAX_COMMIT_RETRIES):
-            new = self._child(snap, "append")
-            new["files"] = snap["files"] + entries
-            if batch_id is not None:
-                new["summary"]["batch_ids"][source] = batch_id
-            try:
-                self._write_snapshot(new)
+        for planned in range(MAX_COMMIT_RETRIES + 1):
+            if fenced(snap):
+                return snap["version"]
+            if planned == MAX_COMMIT_RETRIES:
+                break
+            p = plan(snap)
+            if p is None:
+                return None
+            for _ in range(MAX_COMMIT_RETRIES):
+                new = self._child(snap, operation)
+                new.update(p.meta)
+                new["files"] = [
+                    f for f in snap["files"] if f["path"] not in p.remove
+                ] + p.add
+                new["summary"].update(p.summary)
+                if batch_id is not None:
+                    new["summary"]["batch_ids"][source] = batch_id
+                try:
+                    self._write_snapshot(new)
+                except CommitConflict:
+                    latest = self.snapshot()
+                    rebase = self._may_rebase(p.guard, snap, latest)
+                    snap = latest
+                    if rebase and not fenced(snap):
+                        continue
+                    break
+                added = {e["path"] for e in p.add}
+                self._remove_files([e for e in p.written if e["path"] not in added])
                 return new["version"]
-            except CommitConflict:
-                snap = self.snapshot()
-                if batch_id is not None and self._fenced(snap, source, batch_id):
-                    self._remove_files(entries)  # a twin already applied it
-                    return snap["version"]
-        self._remove_files(entries)
-        raise CommitConflict(f"append lost {MAX_COMMIT_RETRIES} commit races")
+            self._remove_files(p.written)  # stale against the winner: re-plan
+        raise CommitConflict(f"{operation} lost {MAX_COMMIT_RETRIES} commit races")
+
+    @staticmethod
+    def _may_rebase(guard: "set | None", snap: dict, latest: dict) -> bool:
+        """The race rule of :meth:`_commit`."""
+        if guard is None:
+            return False
+        if not guard:
+            return True
+        m = snap["spec"]["num_buckets"]
+        if latest["spec"]["num_buckets"] != m:
+            return False
+        return {f["path"] for f in _files_covering(snap["files"], guard, m, m)} == {
+            f["path"] for f in _files_covering(latest["files"], guard, m, m)
+        }
+
+    def _fold(self, snap: dict, files: list, buckets: set) -> "tuple[set, set, list]":
+        """Merge the base and delta files of `files` covering `buckets`
+        into fresh base files: latest row per key, tombstones dropped.
+        Whole files are replaced, so the bucket set is closed first (see
+        _bucket_closure) — which also migrates the legacy-generation files
+        it touches to the current bucketing. Returns (closed buckets,
+        folded paths, new entries)."""
+        spec = snap["spec"]
+        m = spec["num_buckets"]
+        buckets = _bucket_closure(files, buckets, m, m)
+        folded = _files_covering(files, buckets, m, m)
+        schema = T.StructType.fromJson(snap["schema"])
+        base = self._read_projected([f for f in folded if not f.get("delta")], schema)
+        deltas = self._read_projected(
+            [f for f in folded if f.get("delta")], schema, with_op=True
+        )
+        merged = self._merge_mor(base, deltas, spec["key"], spec.get("seq", "event_seq"))
+        return buckets, {f["path"] for f in folded}, self._write_data_files(merged, snap)
+
+    def append(self, df: DataFrame, batch_id: "int | None" = None, source: str = "default") -> int:
+        """Add `df`'s rows as new data files. Appends never invalidate each
+        other, so a lost race re-commits the same files (guard ∅)."""
+
+        def plan(snap):
+            entries = self._write_data_files(df, snap)
+            return _Plan(guard=frozenset(), add=entries, written=entries)
+
+        return self._commit("append", plan, batch_id, source)
 
     def merge_into(
         self,
@@ -1111,12 +1208,12 @@ class IceTable:
         Returns the committed version (None for an empty batch; unchanged
         version when the batch id is fenced).
 
-        Commit races: losers retry against the re-read snapshot. A
-        concurrent commit that left our touched buckets untouched is
-        disjoint — the same data files re-commit on top of it; one that
-        rewrote a touched bucket invalidates our merge input, so the
-        merge recomputes from the new snapshot (Iceberg's validation +
-        retry rule for copy-on-write).
+        Commit races (see _commit): the guard is the touched buckets. A
+        concurrent commit that left them (and the bucket count) untouched
+        is disjoint — the same data files re-commit on top of it; one that
+        rewrote a touched bucket invalidates our merge input, so the merge
+        recomputes from the new snapshot (Iceberg's validation + retry
+        rule for copy-on-write).
 
         Tables created with ``write_mode='mor'`` take the merge-on-read
         path instead: delta files + adaptive compaction.
@@ -1128,142 +1225,149 @@ class IceTable:
         U/D tie deterministically (tombstone wins) and a same-op
         distinct-payload tie arbitrarily.
         """
-        if self.snapshot()["spec"].get("write_mode", "cow") == "mor":
-            return self._merge_into_mor(updates, batch_id, source, op_col, lineage)
-        for _ in range(MAX_COMMIT_RETRIES):
-            snap = self.snapshot()
-            if batch_id is not None and self._fenced(snap, source, batch_id):
-                return snap["version"]
-            spec = snap["spec"]
-            key, num_buckets = spec["key"], spec["num_buckets"]
-            schema = T.StructType.fromJson(snap["schema"])
-            payload_cols = [f.name for f in schema.fields]
+        summary = {"lineage": [lineage]} if lineage is not None else {}
 
-            # ONE slim (key, bucket) projection feeds both probes — the
-            # touched-bucket discovery and the file-range intersection —
-            # so the probe plan (possibly the whole update pipeline when
-            # no probe_df is given) executes once, not twice. persist()
-            # is the right cache here: ≤3 actions, KBs per batch key.
-            # The ONE aggregate also returns each touched bucket's batch
-            # key ENVELOPE (min/max), so the common pruning case — a
-            # file range disjoint from everything the batch touches in
-            # its bucket — is decided on the driver for free, without a
-            # second Spark job (see _split_rewrite_files). r06: callers
-            # that already aggregate the raw batch pass probe_rows and
-            # the probe job disappears entirely.
-            probe = probe_df if probe_df is not None else updates
-            pk = None
-            if probe_rows is not None and probe_rows[0] == num_buckets:
-                bucket_rows = [
-                    {"__bucket": b, "__lo": lo, "__hi": hi}
-                    for (b, lo, hi) in probe_rows[1]
-                ]
-            else:
-                pk = probe.select(
-                    F.col(key).alias("__k"),
-                    self._bucket_expr(key, num_buckets).alias("__bucket"),
-                ).persist()
-                bucket_rows = [
-                    r.asDict()
-                    for r in pk.groupBy("__bucket").agg(
-                        F.min("__k").alias("__lo"), F.max("__k").alias("__hi")
-                    ).collect()
-                ]
-            touched = {r["__bucket"] for r in bucket_rows}
-            envelopes = {
-                r["__bucket"]: (r["__lo"], r["__hi"]) for r in bucket_rows
-            }
-            if not touched:
-                if pk is not None:
-                    pk.unpersist()
-                return None  # empty batch: no commit (re-delivery is a no-op anyway)
-            # pre-rebucket files span several current buckets; a rewrite
-            # replaces whole files, so close the touched set over file
-            # coverage (their unrelated rows are then carried through the
-            # merge and land in current-generation files — rebucket
-            # migration happens lazily, churn-by-churn)
-            touched = _bucket_closure(snap["files"], touched, num_buckets, num_buckets)
-            # file-scoped overwrite: within the touched buckets, only
-            # files whose manifest KEY bounds may contain a batch key are
-            # read + rewritten; bound-disjoint files are carried forward
-            # in the commit (Iceberg overwrite-by-file). At key-localized
-            # churn this cuts the COW rewrite tail from touched-bucket
-            # bytes to overlapping-file bytes.
-            candidates = _files_covering(
-                [f for f in snap["files"] if not f.get("delta")],
-                touched, num_buckets, num_buckets,
+        def plan(snap):
+            if snap["spec"].get("write_mode", "cow") == "mor":
+                return self._plan_mor(snap, updates, op_col, summary)
+            return self._plan_cow(
+                snap, updates, op_col, summary, probe_df, probe_rows
             )
-            # tier-2 exact range probe (split layouts only) needs a
-            # (__k, __bucket) frame; when the probe job was skipped via
-            # probe_rows, derive it from the slim probe projection
-            pk_probe = pk if pk is not None else probe.select(
+
+        return self._commit("merge", plan, batch_id, source)
+
+    def _plan_cow(
+        self,
+        snap: dict,
+        updates: DataFrame,
+        op_col: str,
+        summary: dict,
+        probe_df: "DataFrame | None",
+        probe_rows: "tuple[int, list[tuple]] | None",
+    ) -> "_Plan | None":
+        """One copy-on-write merge pass against `snap` (see merge_into)."""
+        spec = snap["spec"]
+        key, num_buckets = spec["key"], spec["num_buckets"]
+        schema = T.StructType.fromJson(snap["schema"])
+        payload_cols = [f.name for f in schema.fields]
+
+        # ONE slim (key, bucket) projection feeds both probes — the
+        # touched-bucket discovery and the file-range intersection —
+        # so the probe plan (possibly the whole update pipeline when
+        # no probe_df is given) executes once, not twice. persist()
+        # is the right cache here: ≤3 actions, KBs per batch key.
+        # The ONE aggregate also returns each touched bucket's batch
+        # key ENVELOPE (min/max), so the common pruning case — a
+        # file range disjoint from everything the batch touches in
+        # its bucket — is decided on the driver for free, without a
+        # second Spark job (see _split_rewrite_files). r06: callers
+        # that already aggregate the raw batch pass probe_rows and
+        # the probe job disappears entirely.
+        probe = probe_df if probe_df is not None else updates
+        pk = None
+        if probe_rows is not None and probe_rows[0] == num_buckets:
+            bucket_rows = [
+                {"__bucket": b, "__lo": lo, "__hi": hi}
+                for (b, lo, hi) in probe_rows[1]
+            ]
+        else:
+            pk = probe.select(
                 F.col(key).alias("__k"),
                 self._bucket_expr(key, num_buckets).alias("__bucket"),
+            ).persist()
+            bucket_rows = [
+                r.asDict()
+                for r in pk.groupBy("__bucket").agg(
+                    F.min("__k").alias("__lo"), F.max("__k").alias("__hi")
+                ).collect()
+            ]
+        touched = {r["__bucket"] for r in bucket_rows}
+        envelopes = {
+            r["__bucket"]: (r["__lo"], r["__hi"]) for r in bucket_rows
+        }
+        if not touched:
+            if pk is not None:
+                pk.unpersist()
+            return None  # empty batch: no commit (re-delivery is a no-op anyway)
+        # pre-rebucket files span several current buckets; a rewrite
+        # replaces whole files, so close the touched set over file
+        # coverage (their unrelated rows are then carried through the
+        # merge and land in current-generation files — rebucket
+        # migration happens lazily, churn-by-churn)
+        touched = _bucket_closure(snap["files"], touched, num_buckets, num_buckets)
+        # file-scoped overwrite: within the touched buckets, only
+        # files whose manifest KEY bounds may contain a batch key are
+        # read + rewritten; bound-disjoint files are carried forward
+        # in the commit (Iceberg overwrite-by-file). At key-localized
+        # churn this cuts the COW rewrite tail from touched-bucket
+        # bytes to overlapping-file bytes. The guard still covers the
+        # full touched-bucket file set, so a concurrent writer that
+        # rewrote a carried file forces a recompute.
+        candidates = _files_covering(
+            [f for f in snap["files"] if not f.get("delta")],
+            touched, num_buckets, num_buckets,
+        )
+        # tier-2 exact range probe (split layouts only) needs a
+        # (__k, __bucket) frame; when the probe job was skipped via
+        # probe_rows, derive it from the slim probe projection
+        pk_probe = pk if pk is not None else probe.select(
+            F.col(key).alias("__k"),
+            self._bucket_expr(key, num_buckets).alias("__bucket"),
+        )
+        try:
+            hit, carry = self._split_rewrite_files(
+                spec, candidates, pk_probe, envelopes, num_buckets
             )
-            try:
-                hit, carry = self._split_rewrite_files(
-                    spec, candidates, pk_probe, envelopes, num_buckets
+            target = self._read_projected(hit, schema) if hit else None
+
+            # MERGE = (target rows whose key is NOT updated) ∪ (upserts).
+            # The anti-join needs only the update KEYS — broadcastable,
+            # so the target side is filtered with NO shuffle and NO sort
+            # (a full-outer formulation would force a SortMergeJoin of
+            # the wide rows). At billion-key batch scale disable the
+            # broadcast (AQE then picks a shuffled-hash anti join keyed
+            # on doc_id — both sides already hash-partition on it).
+            # r06: the key set comes from the PROBE (cached slim rows,
+            # or the caller's slim raw projection) instead of
+            # re-executing the whole `updates` plan a second time just
+            # for its keys — the probe contract guarantees the sets are
+            # equal. Distinct before the broadcast so a raw multi-event
+            # batch doesn't inflate the build side.
+            upserts = updates.filter(F.col(op_col) != "D").select(*payload_cols)
+            if target is None:
+                merged = upserts
+            else:
+                upd_keys = F.broadcast(
+                    pk_probe.select(F.col("__k").alias(key)).distinct()
                 )
-                target = self._read_projected(hit, schema) if hit else None
+                merged = target.join(upd_keys, key, "left_anti").unionByName(upserts)
 
-                # MERGE = (target rows whose key is NOT updated) ∪ (upserts).
-                # The anti-join needs only the update KEYS — broadcastable,
-                # so the target side is filtered with NO shuffle and NO sort
-                # (a full-outer formulation would force a SortMergeJoin of
-                # the wide rows). At billion-key batch scale disable the
-                # broadcast (AQE then picks a shuffled-hash anti join keyed
-                # on doc_id — both sides already hash-partition on it).
-                # r06: the key set comes from the PROBE (cached slim rows,
-                # or the caller's slim raw projection) instead of
-                # re-executing the whole `updates` plan a second time just
-                # for its keys — the probe contract guarantees the sets are
-                # equal. Distinct before the broadcast so a raw multi-event
-                # batch doesn't inflate the build side.
-                upserts = updates.filter(F.col(op_col) != "D").select(*payload_cols)
-                if target is None:
-                    merged = upserts
-                else:
-                    upd_keys = F.broadcast(
-                        pk_probe.select(F.col("__k").alias(key)).distinct()
-                    )
-                    merged = target.join(upd_keys, key, "left_anti").unionByName(upserts)
+            entries = self._write_data_files(merged, snap)
+        finally:
+            if pk is not None:
+                pk.unpersist()  # write executed (or failed) — pk is done
+        self.last_merge_info = {
+            "files_candidate": len(candidates),
+            "files_rewritten": len(hit),
+            "files_carried": len(carry),
+            "files_written": len(entries),
+            "probe_ran": self._last_probe_ran,
+            "bytes_written": sum(
+                os.path.getsize(os.path.join(self.root, e["path"]))
+                for e in entries
+            ),
+        }
+        return _Plan(
+            guard=touched,
+            add=entries,
+            remove={f["path"] for f in hit},
+            summary=summary,
+            written=entries,
+        )
 
-                entries = self._write_data_files(
-                    merged, key, num_buckets, snap["schema_version"]
-                )
-            finally:
-                if pk is not None:
-                    pk.unpersist()  # write executed (or failed) — pk is done
-            version = self._try_commit_merge(
-                snap, touched, entries, batch_id, source, lineage,
-                remove_paths={f["path"] for f in hit},
-            )
-            if version is not None:
-                self.last_merge_info = {
-                    "files_candidate": len(candidates),
-                    "files_rewritten": len(hit),
-                    "files_carried": len(carry),
-                    "files_written": len(entries),
-                    "probe_ran": self._last_probe_ran,
-                    "bytes_written": sum(
-                        os.path.getsize(os.path.join(self.root, e["path"]))
-                        for e in entries
-                    ),
-                }
-                return version
-            # touched-bucket overlap with a concurrent commit: data files
-            # are stale — drop them and recompute against the new snapshot
-            self._remove_files(entries)
-        raise CommitConflict(f"merge_into lost {MAX_COMMIT_RETRIES} commit races")
-
-    def _merge_into_mor(
-        self,
-        updates: DataFrame,
-        batch_id: "int | None",
-        source: str,
-        op_col: str,
-        lineage: "dict | None",
-    ) -> "int | None":
+    def _plan_mor(
+        self, snap: dict, updates: DataFrame, op_col: str, summary: dict
+    ) -> "_Plan | None":
         """Merge-on-read MERGE: append the (pre-deduped) updates as
         per-bucket DELTA files — payload + ``__op`` (deletes stay as
         tombstone rows) — WITHOUT reading or rewriting the base table.
@@ -1277,162 +1381,43 @@ class IceTable:
         and the chain is replaced — adaptive per-bucket copy-on-write
         that bounds read amplification to ``compact_threshold`` files.
 
-        Conflict handling: any lost commit race recomputes from the fresh
-        snapshot (MOR recompute is cheap — the delta write) and removes
-        the orphaned files of the failed attempt.
-        """
-        for _ in range(MAX_COMMIT_RETRIES):
-            snap = self.snapshot()
-            if batch_id is not None and self._fenced(snap, source, batch_id):
-                return snap["version"]
-            spec = snap["spec"]
-            key, num_buckets = spec["key"], spec["num_buckets"]
-            seq = spec.get("seq", "event_seq")
-            schema = T.StructType.fromJson(snap["schema"])
-            payload_cols = [f.name for f in schema.fields]
+        Guard None: any lost commit race recomputes from the fresh
+        snapshot (MOR recompute is cheap — the delta write)."""
+        spec = snap["spec"]
+        num_buckets = spec["num_buckets"]
+        payload_cols = [f.name for f in T.StructType.fromJson(snap["schema"]).fields]
+        delta_df = updates.select(*payload_cols, F.col(op_col).alias("__op"))
+        entries = self._write_data_files(delta_df, snap, delta=True)
+        if not entries:
+            return None  # empty batch: nothing to merge, nothing to commit
 
-            delta_df = updates.select(*payload_cols, F.col(op_col).alias("__op"))
-            entries = self._write_data_files(
-                delta_df, key, num_buckets, snap["schema_version"], delta=True
-            )
-            if not entries:
-                return None  # empty batch: nothing to merge, nothing to commit
-
-            # read amplification per CURRENT bucket = delta files covering
-            # it (a pre-rebucket delta file counts toward every bucket it
-            # spans — it is read for each of them)
-            chain: dict[int, int] = {}
-            for f in snap["files"]:
-                if f.get("delta"):
-                    for b in _entry_buckets(f, num_buckets, num_buckets):
-                        chain[b] = chain.get(b, 0) + 1
-            for e in entries:
-                chain[e["bucket"]] = chain.get(e["bucket"], 0) + 1
-            compact = {
-                b
-                for b, c in chain.items()
-                if c > self.bucket_compact_threshold(spec, b)
-            }
-            removed_paths: set = set()
-            comp_entries: list[dict] = []
-            if compact:
-                # compaction replaces whole files → closed set (see
-                # _bucket_closure); this also lazily migrates legacy-
-                # generation files it touches to the current bucketing
-                all_files = snap["files"] + entries
-                compact = _bucket_closure(
-                    all_files, compact, num_buckets, num_buckets
-                )
-                removed_paths = {
-                    f["path"]
-                    for f in _files_covering(
-                        all_files, compact, num_buckets, num_buckets
-                    )
-                }
-                base = self._read_projected(
-                    [
-                        f for f in snap["files"]
-                        if not f.get("delta") and f["path"] in removed_paths
-                    ],
-                    schema,
-                )
-                deltas = self._read_projected(
-                    [
-                        f for f in list(snap["files"]) + entries
-                        if f.get("delta") and f["path"] in removed_paths
-                    ],
-                    schema,
-                    with_op=True,
-                )
-                merged = self._merge_mor(base, deltas, key, seq)
-                comp_entries = self._write_data_files(
-                    merged, key, num_buckets, snap["schema_version"]
-                )
-
-            new = self._child(snap, "merge")
-            new["files"] = (
-                [f for f in snap["files"] if f["path"] not in removed_paths]
-                + [e for e in entries if e["path"] not in removed_paths]
-                + comp_entries
-            )
-            if batch_id is not None:
-                new["summary"]["batch_ids"][source] = batch_id
-            if lineage is not None:
-                new["summary"]["lineage"] = [lineage]
-            if compact:
-                new["summary"]["compacted_buckets"] = sorted(compact)
-            try:
-                self._write_snapshot(new)
-                if compact:
-                    # the fresh deltas of compacted buckets were folded into
-                    # the new base files and never referenced — drop them
-                    self._remove_files(
-                        [e for e in entries if e["path"] in removed_paths]
-                    )
-                return new["version"]
-            except CommitConflict:
-                self._remove_files(entries + comp_entries)
-                latest = self.snapshot()
-                if batch_id is not None and self._fenced(latest, source, batch_id):
-                    return latest["version"]
-                # recompute against the newer snapshot
-        raise CommitConflict(f"merge_into(mor) lost {MAX_COMMIT_RETRIES} commit races")
-
-    def _try_commit_merge(
-        self,
-        snap: dict,
-        touched: set,
-        entries: list[dict],
-        batch_id: "int | None",
-        source: str,
-        lineage: "dict | None",
-        remove_paths: "set[str] | None" = None,
-    ) -> "int | None":
-        """Commit `entries` replacing `touched` buckets; retries across
-        DISJOINT concurrent commits, returns None when a conflicting
-        commit overlapped the touched buckets (caller must recompute).
-
-        ``remove_paths`` narrows the replaced set to specific files
-        (file-scoped overwrite — the key-bound-disjoint rest of the
-        touched buckets is carried forward); conflict VALIDATION still
-        covers the full touched-bucket file set, so a concurrent writer
-        that rewrote a carried file forces a recompute."""
-        num_buckets = snap["spec"]["num_buckets"]
-        base_touched_files = {
-            f["path"]
-            for f in _files_covering(snap["files"], touched, num_buckets, num_buckets)
+        # read amplification per CURRENT bucket = delta files covering
+        # it (a pre-rebucket delta file counts toward every bucket it
+        # spans — it is read for each of them)
+        chain: dict[int, int] = {}
+        for f in snap["files"]:
+            if f.get("delta"):
+                for b in _entry_buckets(f, num_buckets, num_buckets):
+                    chain[b] = chain.get(b, 0) + 1
+        for e in entries:
+            chain[e["bucket"]] = chain.get(e["bucket"], 0) + 1
+        compact = {
+            b
+            for b, c in chain.items()
+            if c > self.bucket_compact_threshold(spec, b)
         }
-        if remove_paths is None:
-            remove_paths = base_touched_files
-        for _ in range(MAX_COMMIT_RETRIES):
-            new = self._child(snap, "merge")
-            new["files"] = [
-                f for f in snap["files"] if f["path"] not in remove_paths
-            ] + entries
-            if batch_id is not None:
-                new["summary"]["batch_ids"][source] = batch_id
-            if lineage is not None:
-                new["summary"]["lineage"] = [lineage]
-            try:
-                self._write_snapshot(new)
-                return new["version"]
-            except CommitConflict:
-                latest = self.snapshot()
-                if batch_id is not None and self._fenced(latest, source, batch_id):
-                    self._remove_files(entries)  # a twin already applied it
-                    return latest["version"]
-                if latest["spec"]["num_buckets"] != num_buckets:
-                    return None  # concurrent rebucket — recompute in the new space
-                latest_touched_files = {
-                    f["path"]
-                    for f in _files_covering(
-                        latest["files"], touched, num_buckets, num_buckets
-                    )
-                }
-                if latest_touched_files != base_touched_files:
-                    return None  # overlapping writer won — recompute
-                snap = latest
-        raise CommitConflict(f"merge commit lost {MAX_COMMIT_RETRIES} races")
+        if not compact:
+            return _Plan(guard=None, add=entries, summary=summary, written=entries)
+        # the fresh deltas of compacted buckets fold into the new base
+        # files and are never referenced; the commit deletes them
+        compact, folded, comp_entries = self._fold(snap, snap["files"] + entries, compact)
+        return _Plan(
+            guard=None,
+            add=[e for e in entries if e["path"] not in folded] + comp_entries,
+            remove=folded,
+            summary={**summary, "compacted_buckets": sorted(compact)},
+            written=entries + comp_entries,
+        )
 
     def compact(self, buckets: "set[int] | None" = None) -> "int | None":
         """Manual merge-on-read compaction: fold the delta chains of
@@ -1443,11 +1428,11 @@ class IceTable:
         entry point for squeezing it to 1 ahead of read-heavy workloads.
         State-invariant by construction — changes() across a compaction
         commit is empty. Returns the committed version (None when the
-        selected buckets hold no deltas)."""
-        for _ in range(MAX_COMMIT_RETRIES):
-            snap = self.snapshot()
-            spec = snap["spec"]
-            m = spec["num_buckets"]
+        selected buckets hold no deltas). Guard None: a concurrent commit
+        may have rewritten or extended the folded chains."""
+
+        def plan(snap):
+            m = snap["spec"]["num_buckets"]
             delta_buckets: set = set()
             for f in snap["files"]:
                 if f.get("delta"):
@@ -1455,43 +1440,16 @@ class IceTable:
             todo = delta_buckets if buckets is None else delta_buckets & set(buckets)
             if not todo:
                 return None
-            todo = _bucket_closure(snap["files"], todo, m, m)
-            removed_paths = {
-                f["path"] for f in _files_covering(snap["files"], todo, m, m)
-            }
-            schema = T.StructType.fromJson(snap["schema"])
-            base = self._read_projected(
-                [
-                    f for f in snap["files"]
-                    if not f.get("delta") and f["path"] in removed_paths
-                ],
-                schema,
+            todo, folded, entries = self._fold(snap, snap["files"], todo)
+            return _Plan(
+                guard=None,
+                add=entries,
+                remove=folded,
+                summary={"compacted_buckets": sorted(todo)},
+                written=entries,
             )
-            deltas = self._read_projected(
-                [
-                    f for f in snap["files"]
-                    if f.get("delta") and f["path"] in removed_paths
-                ],
-                schema,
-                with_op=True,
-            )
-            merged = self._merge_mor(base, deltas, spec["key"], spec.get("seq", "event_seq"))
-            entries = self._write_data_files(
-                merged, spec["key"], m, snap["schema_version"]
-            )
-            new = self._child(snap, "compact")
-            new["files"] = [
-                f for f in snap["files"] if f["path"] not in removed_paths
-            ] + entries
-            new["summary"]["compacted_buckets"] = sorted(todo)
-            try:
-                self._write_snapshot(new)
-                return new["version"]
-            except CommitConflict:
-                # a concurrent commit may have rewritten or extended the
-                # chains we folded — drop our files and recompute
-                self._remove_files(entries)
-        raise CommitConflict(f"compact lost {MAX_COMMIT_RETRIES} commit races")
+
+        return self._commit("compact", plan)
 
     def expire_snapshots(
         self, keep_last: int = 2, orphan_grace_sec: float = 3 * 86400
@@ -1586,21 +1544,25 @@ class IceTable:
         Iceberg parity: bucket-transform partition-spec evolution
         (`PartitionSpec` evolution API) — same contract: old files keep
         their old spec, new writes use the new one, metadata-only commit.
+        A lost race re-plans on the winner (guard None).
         """
         if not isinstance(new_num_buckets, int) or new_num_buckets <= 0:
             raise ValueError(f"num_buckets must be a positive int, got {new_num_buckets!r}")
-        snap = self.snapshot()
-        old_n = snap["spec"]["num_buckets"]
-        if new_num_buckets == old_n:
-            return snap["version"]
-        new = self._child(snap, "rebucket")
-        new["spec"] = dict(snap["spec"], num_buckets=new_num_buckets)
-        new["files"] = [
-            {**f, "nbuckets": _entry_gen(f, old_n)} for f in snap["files"]
-        ]
-        new["summary"]["rebucket"] = {"from": old_n, "to": new_num_buckets}
-        self._write_snapshot(new)
-        return new["version"]
+
+        def plan(snap):
+            old_n = snap["spec"]["num_buckets"]
+            if new_num_buckets == old_n:
+                return None
+            return _Plan(
+                guard=None,
+                remove={f["path"] for f in snap["files"]},
+                add=[{**f, "nbuckets": _entry_gen(f, old_n)} for f in snap["files"]],
+                meta={"spec": dict(snap["spec"], num_buckets=new_num_buckets)},
+                summary={"rebucket": {"from": old_n, "to": new_num_buckets}},
+            )
+
+        v = self._commit("rebucket", plan)
+        return v if v is not None else self.current_version()
 
     def migrate_buckets(self, max_files: "int | None" = None) -> "int | None":
         """Rewrite files of older bucket generations into the current
@@ -1610,10 +1572,9 @@ class IceTable:
         ``changes()`` across the commit is empty. ``max_files`` bounds one
         pass for incremental migration of a huge table. Returns the
         committed version, or None when every file is already current."""
-        for _ in range(MAX_COMMIT_RETRIES):
-            snap = self.snapshot()
-            spec = snap["spec"]
-            m = spec["num_buckets"]
+
+        def plan(snap):
+            m = snap["spec"]["num_buckets"]
             legacy = [f for f in snap["files"] if _entry_gen(f, m) != m]
             if max_files is not None:
                 legacy = legacy[:max_files]
@@ -1625,37 +1586,37 @@ class IceTable:
             delta_sel = [f for f in legacy if f.get("delta")]
             if base_sel:
                 entries += self._write_data_files(
-                    self._read_projected(base_sel, schema),
-                    spec["key"], m, snap["schema_version"],
+                    self._read_projected(base_sel, schema), snap
                 )
             if delta_sel:
                 entries += self._write_data_files(
                     self._read_projected(delta_sel, schema, with_op=True),
-                    spec["key"], m, snap["schema_version"], delta=True,
+                    snap, delta=True,
                 )
-            legacy_paths = {f["path"] for f in legacy}
-            new = self._child(snap, "migrate")
-            new["files"] = [
-                f for f in snap["files"] if f["path"] not in legacy_paths
-            ] + entries
-            new["summary"]["migrated_files"] = len(legacy)
-            try:
-                self._write_snapshot(new)
-                return new["version"]
-            except CommitConflict:
-                self._remove_files(entries)  # recompute against the winner
-        raise CommitConflict(f"migrate_buckets lost {MAX_COMMIT_RETRIES} commit races")
+            return _Plan(
+                guard=None,
+                add=entries,
+                remove={f["path"] for f in legacy},
+                summary={"migrated_files": len(legacy)},
+                written=entries,
+            )
+
+        return self._commit("migrate", plan)
 
     def evolve_schema(self, new_schema: T.StructType) -> int:
         """Retype-in-place / add-column schema evolution commit. Existing
-        data files stay; readers cast-project them to the new schema."""
-        snap = self.snapshot()
-        new = self._child(snap, "evolve")
-        new["schema"] = json.loads(new_schema.json())
-        new["schema_version"] = snap["schema_version"] + 1
-        new["files"] = snap["files"]
-        self._write_snapshot(new)
-        return new["version"]
+        data files stay; readers cast-project them to the new schema. A
+        lost race re-plans on the winner (guard None)."""
+        return self._commit(
+            "evolve",
+            lambda snap: _Plan(
+                guard=None,
+                meta={
+                    "schema": json.loads(new_schema.json()),
+                    "schema_version": snap["schema_version"] + 1,
+                },
+            ),
+        )
 
     # ------------------------------------------------------------------
 
@@ -1773,43 +1734,40 @@ class IceTable:
         Fast-forward ONLY: if main advanced past the fork point, the
         audit validated a stale base — raises :class:`CommitConflict`;
         re-branch and re-apply (staged batches are fenced per source, so
-        re-applying them to a fresh branch is idempotent). A concurrent
-        publisher racing for the same main version loses on the
-        exclusive-create commit, same as any writer."""
+        re-applying them to a fresh branch is idempotent). A writer that
+        wins the race for the same main version makes the publish re-plan
+        (guard None) into this check, so it raises too."""
         if self.branch_name is not None:
             raise ValueError("publish from the main handle")
         b = self.branch(name)
         head = b.snapshot()
         fork_v = min(b.versions())
-        cur = self.current_version()
-        if cur != fork_v:
-            raise CommitConflict(
-                f"main advanced {fork_v} -> {cur} since branch {name!r} "
-                "forked; audit is stale — re-branch and re-apply"
+
+        def plan(snap):
+            if snap["version"] != fork_v:
+                raise CommitConflict(
+                    f"main advanced {fork_v} -> {snap['version']} since branch "
+                    f"{name!r} forked; audit is stale — re-branch and re-apply"
+                )
+            if head["version"] == fork_v:  # nothing staged
+                return None
+            return _Plan(
+                guard=None,
+                add=head["files"],
+                remove={f["path"] for f in snap["files"]},
+                meta={k: head[k] for k in ("schema", "schema_version", "spec")},
+                summary={
+                    "batch_ids": dict(head["summary"].get("batch_ids", {})),
+                    "lineage": head["summary"].get("lineage", []),
+                    "branch": name,
+                    "branch_head": head["version"],
+                },
             )
-        if head["version"] == fork_v:  # nothing staged
-            if drop:
-                self.drop_branch(name)
-            return cur
-        new = {
-            "version": cur + 1,
-            "parent": cur,
-            "schema": head["schema"],
-            "schema_version": head["schema_version"],
-            "spec": head["spec"],
-            "files": head["files"],
-            "summary": {
-                "batch_ids": dict(head["summary"].get("batch_ids", {})),
-                "lineage": head["summary"].get("lineage", []),
-                "operation": "publish",
-                "branch": name,
-                "branch_head": head["version"],
-            },
-        }
-        self._write_snapshot(new)
+
+        v = self._commit("publish", plan)
         if drop:
             self.drop_branch(name)
-        return new["version"]
+        return v if v is not None else fork_v
 
     def drop_branch(self, name: str) -> None:
         """Abandon a branch (the audit-failed path). Metadata goes now;

@@ -15,9 +15,9 @@ The north-star pipeline:
   micro-batch after restart is a no-op → exactly-once table state);
 * lineage recorded at two granularities from ONE stats pass: per-batch
   (offset range, op counts, snapshot version) in the snapshot summary +
-  metrics log, and per source partition (key-hash mod P — how a keyed
-  CDC stream assigns partitions) appended to a queryable parquet
-  metrics table (``metrics_table_path``).
+  ``CdcPipeline.metrics``, and per source partition (key-hash mod P —
+  how a keyed CDC stream assigns partitions) appended to a queryable
+  parquet metrics table (``metrics_table_path``).
 
 At cluster scale the only shuffles per batch are the dedup aggregation
 and the bucketed merge write; both key on doc_id, so AQE coalesces or
@@ -26,7 +26,6 @@ splits them as data dictates.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -54,7 +53,7 @@ TARGET_SCHEMA = T.StructType(
 )
 
 
-def default_coercion_task(engine: str = "catalyst") -> TaskConfig:
+def default_coercion_task() -> TaskConfig:
     """The schema-evolution/coercion step every batch runs: the raw
     event_time_str is normalized to the reference's default output format,
     the epoch-ms long becomes a typed timestamp, and the fractional epoch
@@ -75,7 +74,6 @@ def default_coercion_task(engine: str = "catalyst") -> TaskConfig:
                 # double epoch-sec → long epoch-sec (trunc)
                 {"name": "event_time_sec", "type": "long", "from_unit": "sec", "to_unit": "sec"},
             ],
-            "engine": engine,
         }
     )
 
@@ -139,10 +137,8 @@ class CdcPipeline:
         spark: SparkSession,
         table: IceTable,
         source_name: str = "binlog",
-        engine: str = "catalyst",
         salt_buckets: int = 0,
         stop_on_invalid_record: bool = False,
-        metrics_path: "str | None" = None,
         metrics_table_path: "str | None" = None,
         num_source_partitions: int = 8,
         skew_detect: bool = True,
@@ -151,10 +147,9 @@ class CdcPipeline:
         self.spark = spark
         self.table = table
         self.source_name = source_name
-        self.task = default_coercion_task(engine)
+        self.task = default_coercion_task()
         self.task.stop_on_invalid_record = stop_on_invalid_record
         self.salt_buckets = salt_buckets
-        self.metrics_path = metrics_path
         # per-partition lineage rows land here as a queryable parquet
         # metrics table (spark.read.parquet); None disables the write
         self.metrics_table_path = metrics_table_path
@@ -242,8 +237,10 @@ class CdcPipeline:
             self.spark.conf.set("spark.sql.codegen.wholeStage", prev)
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> "int | None":
-        last = self.table.last_batch_id(self.source_name)
-        if last is not None and batch_id <= last:
+        # one snapshot read serves the fence and the bucket count; the
+        # merge re-checks the fence against its own read at commit time
+        snap = self.table.snapshot()
+        if self.table._fenced(snap, self.source_name, batch_id):
             return None  # fenced duplicate delivery
 
         t0 = time.time()
@@ -289,8 +286,7 @@ class CdcPipeline:
         # and harvesting each bucket's key envelope (min/max). The merge
         # then skips its own probe job (probe_rows below), so the raw
         # batch is scanned ONCE for stats + probe instead of twice.
-        spec = self.table.snapshot()["spec"]
-        t_buckets = spec["num_buckets"]
+        t_buckets = snap["spec"]["num_buckets"]
         part_col = F.pmod(
             F.xxhash64("doc_id"), F.lit(self.num_source_partitions)
         )
@@ -412,9 +408,6 @@ class CdcPipeline:
         lineage["merge_sec"] = round(time.time() - t_dedup, 3)
         lineage["wall_time"] = time.time()
         self.metrics.append(lineage)
-        if self.metrics_path:
-            with open(self.metrics_path, "a") as f:
-                f.write(json.dumps(lineage) + "\n")
         if self.metrics_table_path:
             self._write_metrics_rows(pstats, batch_id, version, salt)
         return version
