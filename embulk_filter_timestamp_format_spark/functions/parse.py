@@ -1196,6 +1196,9 @@ class TimestampParserPlan:
         # before any auto_java conversion.
         if any("%" in f for f in formats):
             formats = [f for f in formats if "%" in f]
+        # the formats the reference tries, in order; formats[i] below is
+        # configured[i] after any auto_java lowering
+        self.configured = list(formats)
         if parser_mode == "auto_java":
             # dialect lowering: ruby formats converted to Joda (keeping ruby
             # on failed conversion), which CHANGES semantics to the java

@@ -37,6 +37,8 @@ Guarantees (the Iceberg subset the north rule uses):
 * **schema evolution** — retype-in-place commits bump schema_version;
   old files are read with their original schema and cast-projected to
   the latest (the reference's buildOuputSchema rule applied lake-side).
+  Every write casts to the snapshot's schema, so the files at its
+  schema_version are read with it and Spark infers no schema.
 * **bucket evolution** — ``rebucket(M)`` changes the bucket count in a
   metadata-only commit (Iceberg partition-spec evolution for the bucket
   transform); old files keep their generation's bucketing and every
@@ -260,6 +262,20 @@ class _Plan:
 # spec count, which is how pre-rebucket snapshots stay self-consistent
 # for time travel).
 # ----------------------------------------------------------------------
+
+
+def _cast_to(df: DataFrame, schema: T.StructType, with_op: bool = False) -> DataFrame:
+    """`df` projected onto `schema`: each column cast to its type, a
+    missing one NULL. `with_op` keeps delta rows' ``__op``."""
+    cols = [
+        (F.col(f.name) if f.name in df.columns else F.lit(None))
+        .cast(f.dataType)
+        .alias(f.name)
+        for f in schema.fields
+    ]
+    if with_op:
+        cols.append(F.col("__op"))
+    return df.select(*cols)
 
 
 def _entry_gen(entry: dict, default_n: int) -> int:
@@ -560,31 +576,35 @@ class IceTable:
         return T.StructType.fromJson(self.snapshot(version)["schema"])
 
     def _read_projected(
-        self, files: list[dict], schema: T.StructType, with_op: bool = False
+        self,
+        snap: dict,
+        files: list[dict],
+        with_op: bool = False,
+        schema: "T.StructType | None" = None,
     ) -> "DataFrame | None":
-        """Files → DataFrame cast-projected to `schema` (schema-evolution
-        read rule: each file is read with its own schema_version and
-        projected to the requested one). `with_op` keeps the delta files'
-        ``__op`` column. None when `files` is empty."""
+        """`snap`'s files → DataFrame cast-projected to `schema` (default:
+        `snap`'s). Schema-evolution read rule: each file is read with its
+        own schema_version and projected to the requested one. Files at
+        `snap`'s schema_version hold exactly its schema (the write casts
+        to it), so they are read with it and no schema-inference job runs;
+        older files infer theirs from the footers. `with_op` keeps the
+        delta files' ``__op`` column. None when `files` is empty."""
         if not files:
             return None
+        snap_schema = T.StructType.fromJson(snap["schema"])
+        schema = schema if schema is not None else snap_schema
         by_sv: dict[int, list[str]] = {}
         for f in files:
             by_sv.setdefault(f.get("schema_version", 1), []).append(
                 os.path.join(self.root, f["path"])
             )
         parts = []
-        for _sv, paths in by_sv.items():
-            df = self.spark.read.parquet(*paths)
-            cols = [
-                (F.col(f.name) if f.name in df.columns else F.lit(None))
-                .cast(f.dataType)
-                .alias(f.name)
-                for f in schema.fields
-            ]
-            if with_op:
-                cols.append(F.col("__op"))
-            parts.append(df.select(*cols))
+        for sv, paths in by_sv.items():
+            reader = self.spark.read
+            if sv == snap["schema_version"]:
+                op = [T.StructField("__op", T.StringType())] if with_op else []
+                reader = reader.schema(T.StructType(snap_schema.fields + op))
+            parts.append(_cast_to(reader.parquet(*paths), schema, with_op))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -673,12 +693,12 @@ class IceTable:
             return self.spark.createDataFrame([], schema)
         base_files = [f for f in files if not f.get("delta")]
         delta_files = [f for f in files if f.get("delta")]
-        base = self._read_projected(base_files, schema)
+        base = self._read_projected(snap, base_files, schema=schema)
         if base is not None and row_filter is not None:
             base = base.filter(row_filter)
         if not delta_files:
             return base if base is not None else self.spark.createDataFrame([], schema)
-        deltas = self._read_projected(delta_files, schema, with_op=True)
+        deltas = self._read_projected(snap, delta_files, with_op=True, schema=schema)
         if row_filter is not None:
             deltas = deltas.filter(row_filter)
         return self._merge_mor(base, deltas, spec["key"], spec.get("seq", "event_seq"))
@@ -748,7 +768,7 @@ class IceTable:
             }
         else:
             kept_files = [f for f in files if may_match(f)]
-            df = self._read_projected(kept_files, schema)
+            df = self._read_projected(snap, kept_files)
             out = df if df is not None else self.spark.createDataFrame([], schema)
             self.last_scan_info = {
                 "files_total": len(files),
@@ -960,6 +980,9 @@ class IceTable:
         """
         tag = uuid.uuid4().hex[:12]
         out_dir = os.path.join(self.data_dir, tag)
+        # every file at a schema_version holds exactly that schema, so
+        # _read_projected reads it without inferring one
+        df = _cast_to(df, T.StructType.fromJson(snap["schema"]), with_op=delta)
         spec = snap["spec"]
         key, num_buckets = spec["key"], spec["num_buckets"]
         schema_version = snap["schema_version"]
@@ -1151,10 +1174,9 @@ class IceTable:
         m = spec["num_buckets"]
         buckets = _bucket_closure(files, buckets, m, m)
         folded = _files_covering(files, buckets, m, m)
-        schema = T.StructType.fromJson(snap["schema"])
-        base = self._read_projected([f for f in folded if not f.get("delta")], schema)
+        base = self._read_projected(snap, [f for f in folded if not f.get("delta")])
         deltas = self._read_projected(
-            [f for f in folded if f.get("delta")], schema, with_op=True
+            snap, [f for f in folded if f.get("delta")], with_op=True
         )
         merged = self._merge_mor(base, deltas, spec["key"], spec.get("seq", "event_seq"))
         return buckets, {f["path"] for f in folded}, self._write_data_files(merged, snap)
@@ -1318,7 +1340,7 @@ class IceTable:
             hit, carry = self._split_rewrite_files(
                 spec, candidates, pk_probe, envelopes, num_buckets
             )
-            target = self._read_projected(hit, schema) if hit else None
+            target = self._read_projected(snap, hit) if hit else None
 
             # MERGE = (target rows whose key is NOT updated) ∪ (upserts).
             # The anti-join needs only the update KEYS — broadcastable,
@@ -1580,17 +1602,16 @@ class IceTable:
                 legacy = legacy[:max_files]
             if not legacy:
                 return None
-            schema = T.StructType.fromJson(snap["schema"])
             entries: list[dict] = []
             base_sel = [f for f in legacy if not f.get("delta")]
             delta_sel = [f for f in legacy if f.get("delta")]
             if base_sel:
                 entries += self._write_data_files(
-                    self._read_projected(base_sel, schema), snap
+                    self._read_projected(snap, base_sel), snap
                 )
             if delta_sel:
                 entries += self._write_data_files(
-                    self._read_projected(delta_sel, schema, with_op=True),
+                    self._read_projected(snap, delta_sel, with_op=True),
                     snap, delta=True,
                 )
             return _Plan(

@@ -19,6 +19,7 @@ batch-vectorized JsonRewritePlan in a pandas UDF under either engine.
 
 from __future__ import annotations
 
+import dataclasses
 from collections.abc import Iterator
 
 import pandas as pd
@@ -178,6 +179,12 @@ class CompiledProjection:
         self.task = task
         self.schema = schema
         self.casts, self.json_plans = _compile_plans(task, schema)
+        # the most parse formats any string cast plans (0: none parses)
+        self.formats_planned = max(
+            (len(cp.parser.formats) for cp in self.casts.values()
+             if cp.source_type == "string"),
+            default=0,
+        )
         self.arrow = task.engine == "arrow"
         if self.arrow:
             return
@@ -311,16 +318,22 @@ class InvalidFlagPlan:
     """Per-batch invalid-record flag with per-format parse staging.
 
     Compiled once per (schema, task) — ``apply(df)`` returns
-    ``df.select(keep + __bad int flag)`` built as two projections: stage
-    A computes one epoch-nanos column per (string column, format) pair
-    (unconditional top-level exprs → full subexpression elimination),
-    stage B combines the cheap staged attributes into the flag. The
+    ``df.select(keep + __bad + __miss1 int flags)`` built as two
+    projections: stage A computes one epoch-nanos column per (string
+    column, format) pair (unconditional top-level exprs → full
+    subexpression elimination), stage B combines the cheap staged
+    attributes into the flags. The
     double reference per staged column in the cascade keeps
     CollapseProject from re-inlining the parse trees into stage B's
     conditional context. ``can_fail`` is False when no configured column
     is a parseable string (callers then skip the flag entirely)."""
 
     FLAG = "__bad"
+    # 1 when a configured string column is non-null and its FIRST format
+    # fails: read off the same staged column, so it costs no parse. A
+    # batch summing 0 here parses every row with format 1 alone, and
+    # first-match-wins makes the cascade equal to that format on it.
+    MISS1 = "__miss1"
 
     def __init__(self, schema: T.StructType, task: TaskConfig, keep: list[str]):
         casts, _ = _compile_plans(task, schema)
@@ -332,7 +345,7 @@ class InvalidFlagPlan:
         # per-column fast-path/regex staging (same machinery as
         # CompiledProjection — fixed-width rows skip the regex)
         self.pre_levels: list[list[tuple[str, Column]]] = []
-        cond = None
+        cond = miss = None
         for name, plan in scasts:
             stages, names = plan.parser.staged_stages(F.col(name), f"bad_{name}")
             while len(self.pre_levels) < len(stages):
@@ -346,10 +359,13 @@ class InvalidFlagPlan:
             )
             c = F.col(name).isNotNull() & parsed.isNull()
             cond = c if cond is None else cond | c
+            m = F.col(name).isNotNull() & F.col(names[0]).isNull()
+            miss = m if miss is None else miss | m
         self._keep = keep
         self._srcs = srcs
         self.stage_b: list = [F.col(c) for c in keep] + [
-            cond.cast("int").alias(self.FLAG)
+            cond.cast("int").alias(self.FLAG),
+            miss.cast("int").alias(self.MISS1),
         ]
 
     def apply(self, df: DataFrame) -> DataFrame:
@@ -357,6 +373,33 @@ class InvalidFlagPlan:
         for level in self.pre_levels:
             df = df.select("*", *[e.alias(n) for n, e in level])
         return df.select(*self.stage_b)
+
+
+def first_format_task(task: TaskConfig, schema: T.StructType) -> TaskConfig:
+    """``task`` with every string-source cast cut to the first format of
+    its effective list, the one ``TimestampParserPlan`` plans after the
+    mixed-dialect filter and ``auto_java`` lowering: ``[java, ruby]`` cuts
+    to the ruby format. Returns ``task`` itself when no column plans more
+    than one format.
+
+    Exact wherever format 1 parses: the cascade is the first non-null of
+    the formats' results, so on a value format 1 parses both plans agree.
+    """
+    casts, _ = _compile_plans(task, schema)
+    first = {
+        n: cp.parser.configured[:1]
+        for n, cp in casts.items()
+        if cp.source_type == "string" and len(cp.parser.formats) > 1
+    }
+    if not first:
+        return task
+    return dataclasses.replace(
+        task,
+        columns=[
+            dataclasses.replace(c, from_format=first[c.name]) if c.name in first else c
+            for c in task.columns
+        ],
+    )
 
 
 def invalid_filter(df_in: DataFrame, task: TaskConfig) -> "DataFrame | None":

@@ -14,10 +14,15 @@ The north-star pipeline:
 * idempotent batch-id-fenced ``merge_into`` (duplicate delivery of a
   micro-batch after restart is a no-op → exactly-once table state);
 * lineage recorded at two granularities from ONE stats pass: per-batch
-  (offset range, op counts, snapshot version) in the snapshot summary +
-  ``CdcPipeline.metrics``, and per source partition (key-hash mod P —
-  how a keyed CDC stream assigns partitions) appended to a queryable
-  parquet metrics table (``metrics_table_path``).
+  (offset range, op and invalid counts, formats planned) in the
+  committed snapshot's summary, plus the snapshot version and phase
+  seconds in ``CdcPipeline.metrics``; and per source partition (key-hash
+  mod P — how a keyed CDC stream assigns partitions) appended to a
+  queryable parquet metrics table (``metrics_table_path``);
+* the format-prefix rule: a batch whose rows all parse with their
+  column's first format is coerced by a plan of that format alone (see
+  ``apply_batch``), so an aligned feed never plans the cascade's later
+  formats.
 
 At cluster scale the only shuffles per batch are the dedup aggregation
 and the bucketed merge write; both key on doc_id, so AQE coalesces or
@@ -36,6 +41,7 @@ from pyspark.sql import types as T
 from .. import policy
 from ..lake import IceTable
 from ..plans import InvalidFlagPlan, TaskConfig, apply_task, invalid_filter
+from ..plans.apply import CompiledProjection, first_format_task
 from ..sources.binlog import BINLOG_SCHEMA
 
 # target table: pre-tokenized training sequences + engine-managed time cols
@@ -119,7 +125,7 @@ class InvalidRecordError(RuntimeError):
     pass
 
 
-_UNSET = object()  # sentinel (an 'if col == "x"' would build a Column)
+_STATS_COLS = ["offset", "op", "doc_id"]  # raw columns the stats pass reads
 
 # Hot-key detection reads a sample of at most this many doc_ids. The key
 # distribution of a binlog is stable across micro-batches, so the probe
@@ -164,22 +170,29 @@ class CdcPipeline:
         self.skew_threshold = skew_threshold
         self._batches_since_probe: "int | None" = None
         self._last_salt = 0
-        self._proj = None
+        # the format-prefix rule's state and its lazily built plans,
+        # keyed by `narrow` (first format only) — see apply_batch
+        self._narrow = False
+        self._tasks: dict = {}
+        self._projs: dict = {}
+        self._flags: dict = {}
         self._out_cols = None
-        self._invalid_plan = _UNSET
 
     # ------------------------------------------------------------------
 
-    def coerce(self, batch_df: DataFrame) -> DataFrame:
+    def coerce(
+        self, batch_df: DataFrame, proj: "CompiledProjection | None" = None
+    ) -> DataFrame:
         """tsfmt layer → target schema. tokens untouched (invariant).
 
-        The projection (stage columns included) is compiled once per
-        pipeline and reused for every micro-batch — per-batch Python work
-        is just two `select` calls."""
-        if self._proj is None:
-            from ..plans.apply import CompiledProjection
-
-            self._proj = CompiledProjection(self.task, batch_df.schema)
+        ``proj`` is the coercion projection to apply: by default the full
+        format cascade, exact on any input; ``apply_batch`` passes the one
+        its stats pass chose. Projections (stage columns included) are
+        compiled once per pipeline and reused for every micro-batch —
+        per-batch Python work is just two `select` calls."""
+        if proj is None:
+            proj = self._projection(batch_df.schema, narrow=False)
+        if self._out_cols is None:
             self._out_cols = [
                 F.col("op"),
                 F.col("doc_id"),
@@ -192,7 +205,44 @@ class CdcPipeline:
                 F.col("event_time_ms").alias("event_time"),
                 F.col("event_time_sec").alias("ingest_time_unix"),
             ]
-        return self._proj.apply(batch_df).select(*self._out_cols)
+        return proj.apply(batch_df).select(*self._out_cols)
+
+    def _task(self, schema: T.StructType, narrow: bool) -> TaskConfig:
+        """The coercion task, or its first-format cut when `narrow`."""
+        if narrow not in self._tasks:
+            self._tasks[narrow] = (
+                first_format_task(self.task, schema) if narrow else self.task
+            )
+        return self._tasks[narrow]
+
+    def _projection(self, schema: T.StructType, narrow: bool) -> CompiledProjection:
+        if narrow not in self._projs:
+            self._projs[narrow] = CompiledProjection(self._task(schema, narrow), schema)
+        return self._projs[narrow]
+
+    def _flag_plan(self, schema: T.StructType, narrow: bool) -> "InvalidFlagPlan | None":
+        """The stats pass's invalid flag (None when no column can fail).
+        STAGED as two projections (one nanos column PER format, then a
+        cheap attribute cascade): inlined directly under the hash
+        aggregate the multi-format coalesce re-runs each later format's
+        regex per field reference (conditional-context CSE defeat) AND
+        exceeds janino's 64 KB method limit, de-optimizing the stage."""
+        if narrow not in self._flags:
+            plan = InvalidFlagPlan(schema, self._task(schema, narrow), _STATS_COLS)
+            self._flags[narrow] = plan if plan.can_fail else None
+        return self._flags[narrow]
+
+    def _invalid_by_part(self, batch_df: DataFrame, part_col) -> dict:
+        """Exact full-cascade invalid count per source partition: one job
+        over the raw batch."""
+        plan = self._flag_plan(batch_df.schema, narrow=False)
+        return {
+            r["__part"]: r["invalid"]
+            for r in plan.apply(batch_df)
+            .groupBy(part_col.alias("__part"))
+            .agg(F.sum(InvalidFlagPlan.FLAG).alias("invalid"))
+            .collect()
+        }
 
     def _detect_skew(self, batch_df: DataFrame, events: int) -> int:
         """Count-based hot-key detection on a bounded doc_id sample: the
@@ -220,6 +270,31 @@ class CdcPipeline:
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> "int | None":
         """foreachBatch body. Returns committed snapshot version.
 
+        The format-prefix rule. On a small batch, planning and compiling
+        the multi-format parse cascade costs more than running it, so the
+        batch plans the cascade only when its rows need it. The stats
+        pass sums ``miss1``: rows with a non-null configured string value
+        that their column's first (effective) format does not parse. A
+        batch with ``miss1 == 0`` is coerced by a plan of each column's
+        first format alone — exact, since first-match-wins makes the
+        cascade equal format 1 wherever format 1 parses — and otherwise by
+        the full cascade. The stats pass runs in one of two modes,
+        because a binlog's shape is stable across micro-batches (the same
+        premise as the skew probe's interval):
+
+        * full (the first batch, and after any miss): the full-cascade
+          invalid flag, with ``miss1`` read off its format-1 column for
+          free. A batch with ``miss1 == 0`` switches to narrow mode.
+        * narrow: a format-1-only flag, which counts ``miss1`` and implies
+          0 invalid rows when it is 0. When it is not, one more job over
+          the raw batch counts the exact full-cascade invalid rows (per
+          source partition), the batch is coerced by the full cascade,
+          and the pipeline returns to full mode.
+
+        ``stop_on_invalid_record`` aborts on the exact count in both modes,
+        before ``merge_into``. ``metrics``/lineage record
+        ``formats_planned`` (1, or the cascade's length).
+
         Whole-stage codegen is DISABLED inside the batch: the inline
         multi-format parse cascade compiled to a >64 KB method under WSCG
         fusion (WSCG cannot split expression code whose inputs are
@@ -244,11 +319,14 @@ class CdcPipeline:
             return None  # fenced duplicate delivery
 
         t0 = time.time()
+        schema = batch_df.schema
+        narrow = self._narrow
         # batch lineage stats from the RAW batch: a column-pruned scan
         # (parquet footer stats make this nearly free). The invalid-record
-        # count folds into the SAME pass (it alone forces the parse of the
-        # configured string columns) — it feeds lineage observability AND
-        # stop_on_invalid_record, so the abort path costs no extra scan.
+        # and format-1 miss counts fold into the SAME pass (they alone
+        # force the parse of the configured string columns) — they feed
+        # lineage observability, stop_on_invalid_record and the
+        # format-prefix rule, so none of them costs an extra scan.
         # (An Observation would be free-er, but Observation.get never
         # resolves for foreachBatch micro-batch lineage.) The count is the
         # observability twin of the reference's per-value WARN
@@ -259,22 +337,12 @@ class CdcPipeline:
             F.max("offset").alias("max_offset"),
             F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes"),
         ]
-        stats_in = batch_df.select("offset", "op", "doc_id")
-        if self._invalid_plan is _UNSET:
-            # compiled once, reused across micro-batches. The flag is
-            # STAGED as two projections (one nanos column PER format,
-            # then a cheap attribute cascade): inlined directly under
-            # the hash aggregate the multi-format coalesce re-runs
-            # each later format's regex per field reference
-            # (conditional-context CSE defeat) AND exceeds janino's
-            # 64 KB method limit, de-optimizing the stage
-            plan = InvalidFlagPlan(
-                batch_df.schema, self.task, ["offset", "op", "doc_id"]
-            )
-            self._invalid_plan = plan if plan.can_fail else None
-        if self._invalid_plan is not None:
-            stats_in = self._invalid_plan.apply(batch_df)
+        stats_in = batch_df.select(*_STATS_COLS)
+        flag_plan = self._flag_plan(schema, narrow)
+        if flag_plan is not None:
+            stats_in = flag_plan.apply(batch_df)
             aggs.append(F.sum(InvalidFlagPlan.FLAG).alias("invalid"))
+            aggs.append(F.sum(InvalidFlagPlan.MISS1).alias("miss1"))
         # per-source-partition lineage in the SAME pass (north-rule
         # granularity): partition = key-hash mod P, the assignment a keyed
         # CDC stream (e.g. key-partitioned Kafka topic) would carry. The
@@ -320,14 +388,11 @@ class CdcPipeline:
         for r in combined:
             p = pstats_by_part.setdefault(
                 r["__part"],
-                {"__part": r["__part"], "events": 0, "deletes": 0,
-                 "min_offset": None, "max_offset": None,
-                 **({"invalid": 0} if "invalid" in r else {})},
+                {"__part": r["__part"], "min_offset": None, "max_offset": None},
             )
-            p["events"] += r["events"]
-            p["deletes"] += r["deletes"]
-            if "invalid" in r:
-                p["invalid"] += r["invalid"] or 0
+            for k in ("events", "deletes", "invalid", "miss1"):
+                if k in r:
+                    p[k] = p.get(k, 0) + (r[k] or 0)
             p["min_offset"] = (
                 r["min_offset"] if p["min_offset"] is None
                 else min(p["min_offset"], r["min_offset"])
@@ -344,7 +409,15 @@ class CdcPipeline:
             )
         pstats = sorted(pstats_by_part.values(), key=lambda p: p["__part"])
         probe_rows = (t_buckets, [(b, lo, hi) for b, (lo, hi) in env.items()])
-        n_bad = sum(r.get("invalid") or 0 for r in pstats)
+        # the format-prefix rule (see apply_batch)
+        miss1 = sum(p.get("miss1", 0) for p in pstats)
+        if narrow and miss1:
+            exact = self._invalid_by_part(batch_df, part_col)
+            for p in pstats:
+                p["invalid"] = exact.get(p["__part"]) or 0
+        fits = not miss1 and self._task(schema, True) is not self.task
+        self._narrow = fits
+        n_bad = sum(p.get("invalid", 0) for p in pstats)
         if self.task.stop_on_invalid_record and n_bad:
             raise InvalidRecordError(
                 f"batch {batch_id}: {n_bad} unparseable record(s); "
@@ -369,15 +442,33 @@ class CdcPipeline:
         # commute and the tsfmt parse runs over the per-key latest rows
         # only (~1/3 of the raw batch on the headline replay) instead of
         # every raw event. The maxes aggregate reads raw columns either
-        # way (column pruning keeps the parse out of it).
-        latest = self.coerce(dedup_latest(batch_df, salt_buckets=salt))
-        t_dedup = time.time()
+        # way (column pruning keeps the parse out of it). The projection
+        # is the one the format-prefix rule chose: the latest rows are a
+        # subset of the raw batch, so miss1 == 0 holds for them too.
+        proj = self._projection(schema, narrow=fits)
+        latest = self.coerce(dedup_latest(batch_df, salt_buckets=salt), proj)
+        t_plan = time.time()
 
         updates = latest.select(
             "op", "doc_id", "tokens", "n_tok", "source",
             "event_time_str", "event_time", "ingest_time_unix", "event_seq",
         )
-        lineage = {"batch_id": batch_id, "source": self.source_name}
+        # everything known before the commit goes into the lineage the
+        # snapshot summary records; merge_into serializes it at commit
+        lineage = {
+            "batch_id": batch_id,
+            "source": self.source_name,
+            "events": events,
+            "min_offset": min(r["min_offset"] for r in pstats),
+            "max_offset": max(r["max_offset"] for r in pstats),
+            "deletes": sum(r["deletes"] for r in pstats),
+            "invalid": n_bad,
+            "salt_buckets": salt,
+            "formats_planned": proj.formats_planned,
+            # the stats pass, skew probe and (lazy) plan building; the
+            # dedup and coercion execute inside merge_into
+            "stats_sec": round(t_plan - t0, 3),
+        }
         # touched buckets + key envelopes ride the stats aggregate above
         # (probe_rows) — the merge runs NO probe job; the slim raw key
         # projection is still handed over for the anti-join key set and
@@ -393,19 +484,8 @@ class CdcPipeline:
         )
         if version is None:
             return None  # empty batch: nothing merged, nothing committed
-        lineage.update(
-            {
-                "events": events,
-                "min_offset": min(r["min_offset"] for r in pstats),
-                "max_offset": max(r["max_offset"] for r in pstats),
-                "deletes": sum(r["deletes"] for r in pstats),
-                "invalid": n_bad,
-            }
-        )
-        lineage["salt_buckets"] = salt
         lineage["snapshot_version"] = version
-        lineage["dedup_sec"] = round(t_dedup - t0, 3)
-        lineage["merge_sec"] = round(time.time() - t_dedup, 3)
+        lineage["merge_sec"] = round(time.time() - t_plan, 3)
         lineage["wall_time"] = time.time()
         self.metrics.append(lineage)
         if self.metrics_table_path:

@@ -86,6 +86,27 @@ def test_invalid_count_recorded_in_lineage(spark, tmp_path):
     assert pipe.metrics[1]["invalid"] == 0
 
 
+def test_committed_snapshot_records_batch_lineage(spark, tmp_path):
+    ev = binlog_events(spark, 60, 20)
+    t = _fresh_table(spark, tmp_path, "lin")
+    pipe = CdcPipeline(spark, t)
+    version = pipe.apply_batch(ev, 0)
+    stats = ev.agg(
+        F.count(F.lit(1)).alias("events"),
+        F.min("offset").alias("min_offset"),
+        F.max("offset").alias("max_offset"),
+        F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes"),
+    ).collect()[0].asDict()
+    (lineage,) = IceTable.load(spark, t.root).snapshot(version)["summary"]["lineage"]
+    assert lineage["batch_id"] == 0 and lineage["source"] == "binlog"
+    for k, v in stats.items():
+        assert lineage[k] == v, k
+    assert lineage["invalid"] == 0
+    assert lineage["salt_buckets"] == pipe.metrics[0]["salt_buckets"]
+    assert lineage["formats_planned"] == 1  # every event parses with format 1
+    assert lineage["stats_sec"] >= 0
+
+
 # ---------------------------------------------------------------------------
 # commit-conflict retry
 # ---------------------------------------------------------------------------
